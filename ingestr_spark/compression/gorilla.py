@@ -18,19 +18,21 @@ bit-exact on float64 — asserted by tests incl. a hypothesis property.
 
 Scale design: the codecs run as grouped pandas UDFs over (key, chunk) —
 one Arrow batch per chunk, bounded chunk length keeps executor memory flat
-(SURVEY §7.3-5). Round 4 vectorized both directions: ENCODE walks window
-RESTARTS (bounded at ~95 per blob — the Gorilla window only widens) and
-emits whole '10' runs with numpy, assembled by a word-level bit packer;
-the timestamp encoder is fully vectorized (no cross-point state); DECODE
-pairs an inlined fused-control scalar loop with TWO speculative bulk
-paths — uniform '10' runs (strided vector extraction) and, r5, PERIODIC
-mixed-control patterns (descriptor-ring detection, per-phase verified
-gathers, whole-period XOR scans — covers restart flapping and
-streak-just-under-gate shapes) — both verifying every bit before
-consuming and adaptively disabling below their call-overhead break-even. 6-9 Mpt/s encode / 1.3-19 Mpt/s decode (PERF.md) — a native
-(Scala/C) kernel remains the further upgrade path, interface unchanged.
-Scalar reference encoders are retained and byte-equality is
-hypothesis-tested, so CODEC_VERSION stays 2.
+(SURVEY §7.3-5). Round 4 vectorized ENCODE: the value encoder walks window
+RESTARTS and emits whole '10' runs with numpy, the timestamp encoder is
+fully vectorized (no cross-point state), and both are assembled by a
+word-level bit packer. DECODE is one fused scalar loop per stream: one
+11-byte window read holds a complete field at any alignment, and a run of
+'0' controls (value repeats, dod=0 timestamps) is filled vectorized from
+one read. There is no speculative bulk decoder: on the benchmark's seed-1
+series (in process, 4-core VM) the loop alone decodes build_wide's 196k
+points in 261 ms against 333 ms with the uniform-'10', periodic-pattern
+and same-bucket-dod bulk paths and their gating, and the 40k-point
+maintain_query base store in 75 ms against 42 ms — and no timed
+operation of either workload decodes a blob. 6-9 Mpt/s encode; decode
+rates per shape in PERF.md — a native (Scala/C) kernel remains the
+further upgrade path, interface unchanged. Scalar reference encoders are
+retained and byte-equality is hypothesis-tested, so CODEC_VERSION stays 2.
 """
 
 from __future__ import annotations
@@ -306,128 +308,6 @@ def decode_timestamps(blob: bytes) -> np.ndarray:
         raise ValueError("corrupt blob: value out of int64 range") from e
 
 
-_TS_PREFIX_VAL = (0, 0b10, 0b110, 0b1110)  # control value per bucket (ones)
-_TS_CTL_BITS = (1, 2, 3, 4)
-_TS_OFFSETS4 = np.arange(4, dtype=np.int64)
-
-
-def _cumsum_checked(base: int, x: np.ndarray) -> np.ndarray:
-    """``base + cumsum(x)`` in int64 with EXACT overflow detection on the
-    SHIFTED sequence ``s_j = s_{j-1} + x_j`` (s_0 = base): raises
-    OverflowError iff some true running value leaves int64. The xor sign
-    rule is applied per step to (s_{j-1}, x_j, s_j) — NOT to the
-    base-relative cumsum partials, which may legitimately leave int64 for
-    valid blobs (a partial is ``value_j - base``, a difference of two
-    in-range values spanning up to 2^64; review r5 regression). Until the
-    first overflow every s_{j-1} equals the true value, so first-failure
-    detection is exact; valid blobs never trip it because each true
-    running value (a delta or a timestamp) is in range by the encoder's
-    precondition."""
-    if not (-2**63 <= base < 2**63):
-        raise OverflowError
-    s = np.int64(base) + np.cumsum(x)  # wrap arithmetic ≡ true values mod 2^64
-    a = np.concatenate((np.asarray([base], dtype=np.int64), s[:-1]))
-    if bool(np.any(((a ^ x) >= 0) & ((a ^ s) < 0))):
-        raise OverflowError
-    return s
-
-
-def _speculative_ts_run_decode(data_np, datap, pos, ones, delta, prev, out, i, n, blen):
-    """Bulk-decode a run of SAME-BUCKET dod fields (buckets '10'/'110'/
-    '1110' — 9/12/16-bit fields): gather each field's 4-byte window in one
-    2-D take, verify the control prefixes, unzigzag the payload, and
-    reconstruct the double prefix-sum (dod → delta → timestamp) with
-    overflow-checked cumsums. Consumes only the verified prefix. When the
-    run is broken by a '0' (dod=0) control — jittered cadences hit one
-    every ~60 points — the zero-run is consumed here too (one window read
-    + arithmetic fill) and the bulk loop CONTINUES, so a whole
-    zeros-interleaved bucket run decodes without bouncing back to the
-    scalar loop; any other control returns to the caller. Mirrors
-    :func:`_speculative_run_decode` on the value side."""
-    nbits = (0, 7, 9, 12, 64)[ones]
-    ctl = _TS_CTL_BITS[ones]
-    prefix = _TS_PREFIX_VAL[ones]
-    W = ctl + nbits
-    batch = 64
-    from_bytes = int.from_bytes
-    while i < n:
-        k_max = min(n - i, (blen - pos) // W, batch)
-        if k_max <= 0:
-            # fewer than W bits remain: the scalar loop handles any short
-            # tail (the k<96 break-even below would bounce us out anyway)
-            return pos, delta, prev, i
-        else:
-            starts = pos + W * np.arange(k_max, dtype=np.int64)
-            sb = starts >> 3
-            sr = (starts & 7).astype(np.uint64)
-            win = np.ascontiguousarray(data_np[sb[:, None] + _TS_OFFSETS4])
-            u32 = win.view(">u4")[:, 0].astype(np.uint64)
-            field = (u32 >> (np.uint64(32 - W) - sr)) & np.uint64((1 << W) - 1)
-            ok = (field >> np.uint64(nbits)) == prefix
-            k = k_max if ok.all() else int(np.argmax(~ok))
-            if k:
-                u = field[:k] & np.uint64((1 << nbits) - 1)
-                dods = ((u >> np.uint64(1))
-                        ^ (~(u & np.uint64(1)) + np.uint64(1))).view(np.int64)
-                # cheap exact safety bound: |dod| <= 2^(nbits-1), so the
-                # extreme reachable |delta| and |timestamp| over k steps
-                # are scalar arithmetic — when comfortably inside int64
-                # (every real series; epoch seconds are ~2^31) skip the
-                # elementwise overflow checks
-                dmax = abs(delta) + k * (1 << (nbits - 1))
-                if dmax < 2**62 and abs(prev) + k * dmax < 2**62:
-                    deltas = np.int64(delta) + np.cumsum(dods)
-                    prevs = np.int64(prev) + np.cumsum(deltas)
-                else:
-                    deltas = _cumsum_checked(delta, dods)
-                    prevs = _cumsum_checked(prev, deltas)
-                out[i:i + k] = prevs
-                delta = int(deltas[-1])
-                prev = int(prevs[-1])
-                i += k
-                pos += W * k
-        if k == k_max and k_max > 0:
-            # batch exhausted mid-run: grow and keep bulking (growth ONLY
-            # here — growing after a short verified prefix would balloon
-            # the gather to 64k elements per ~60-point segment on jittered
-            # series, a quadratic-style blowup)
-            batch = min(batch * 8, 1 << 16)
-            continue
-        # stopped at a non-bucket control: if it is a '0' (dod=0) run,
-        # consume it here and keep bulking; anything else → scalar resumes
-        if pos >= blen or i >= n:
-            return pos, delta, prev, i
-        if k < 96:
-            # the bucket segment before this break was below the bulk
-            # break-even (~96 points: a gather + verify + double cumsum is
-            # ~25 numpy calls): staying here would run SLOWER than the
-            # scalar loop — measured 7x regression on sparse-jitter
-            # singletons and ~15% on ~60-point jitter segments. Return;
-            # the caller's streak gate + adaptive disable then settle
-            # short-segment blobs on the scalar loop
-            return pos, delta, prev, i
-        b0 = pos >> 3
-        w = from_bytes(datap[b0:b0 + 11], "big")
-        avail = (b0 << 3) + 88 - pos
-        if (w >> (avail - 1)) & 1:
-            return pos, delta, prev, i  # '1…' control of another bucket
-        v = w & ((1 << avail) - 1)
-        z = min(avail - v.bit_length(), blen - pos, n - i)
-        endv = prev + delta * z  # exact python int
-        if endv > 0x7FFFFFFFFFFFFFFF or endv < -0x8000000000000000:
-            raise OverflowError  # caller maps to corrupt-blob ValueError
-        if z == 1:
-            prev = endv
-            out[i] = prev
-        else:
-            out[i:i + z] = prev + delta * np.arange(1, z + 1, dtype=np.int64)
-            prev = endv
-        pos += z
-        i += z
-        batch = 64  # new segment: start with a small gather again
-    return pos, delta, prev, i
-
-
 def _decode_ts_loop(data, pos, blen, n, delta, prev, out, i):
     """Fused-window loop (r5, same rework as decode_values): ONE 11-byte
     read holds a complete field at any alignment (7 alignment + 4 control
@@ -436,19 +316,13 @@ def _decode_ts_loop(data, pos, blen, n, delta, prev, out, i):
     points per window read (the old fast path needed byte alignment and
     took 8 at a time). The endpoint is range-checked with exact python
     ints; intermediates are bounded by the monotonic endpoints, so int64
-    wrap arithmetic inside numpy stays exact. Runs of SAME-bucket nonzero
-    dods hand off to :func:`_speculative_ts_run_decode` after a short
-    streak, like the value decoder's bulk path."""
+    wrap arithmetic inside numpy stays exact. Every nonzero dod is one
+    scalar step on exact python ints; a running value outside int64 fails
+    the ``out[i]`` store with OverflowError."""
     from_bytes = int.from_bytes
     _PAYLOAD = (0, 7, 9, 12, 64)
     INT64_MAX = 0x7FFFFFFFFFFFFFFF
     datap = data + b"\x00" * 16  # fixed-width window reads never run short
-    data_np = np.frombuffer(datap, dtype=np.uint8)
-    streak = 0
-    last_ones = 0
-    spec_calls = 0
-    spec_consumed = 0
-    spec_on = True
     while i < n:
         if pos >= blen:
             raise ValueError(f"truncated blob: need bit {pos + 1}, have {blen}")
@@ -470,7 +344,6 @@ def _decode_ts_loop(data, pos, blen, n, delta, prev, out, i):
                 prev = endv
             pos += k
             i += k
-            streak = 0
             continue
         c = (w >> (avail - 4)) & 15  # top bit is 1, so ones >= 1
         if c < 12:
@@ -495,25 +368,6 @@ def _decode_ts_loop(data, pos, blen, n, delta, prev, out, i):
         prev += delta
         out[i] = prev
         i += 1
-        if ones == last_ones:
-            streak += 1
-        else:
-            streak = 1
-            last_ones = ones
-        if spec_on and streak >= 6 and ones < 4 and i < n:
-            i0 = i
-            pos, delta, prev, i = _speculative_ts_run_decode(
-                data_np, datap, pos, ones, delta, prev, out, i, n, blen
-            )
-            streak = 0  # bulk stopped at a non-matching control
-            # adaptive disable (same as the value decoder): a bulk call
-            # costs ~25 small numpy ops, breaking even near ~100 consumed
-            # points — short same-bucket runs (jittered cadences break a
-            # run every ~60 points with a dod=0) must stay scalar
-            spec_calls += 1
-            spec_consumed += i - i0
-            if spec_calls >= 8 and spec_consumed < 96 * spec_calls:
-                spec_on = False
     return out
 
 
@@ -741,179 +595,6 @@ def _encode_values_scalar(vals: np.ndarray) -> bytes:
     return w.getvalue()
 
 
-_SPEC_OFFSETS = np.arange(16, dtype=np.int64)
-
-
-def _speculative_run_decode(
-    data: np.ndarray, pos: int, mlen: int, trail: int, cur: int,
-    out: np.ndarray, i: int, n: int, blen: int,
-):
-    """Decode a '10' run in bulk: ASSUME the next K fields are all
-    (2 + mlen)-bit '10' fields, extract each field's 16-byte window with ONE
-    2-D gather (viewed as two big-endian u64 lanes), verify the 2-bit
-    controls, keep the longest valid prefix, and XOR-scan the payloads into
-    ``out``. Returns (pos, cur, i) after the verified prefix — the caller's
-    scalar loop handles the first non-'10' control. Sound for any input:
-    nothing is consumed unless its control verified. Batches grow
-    geometrically (64 → ×8) so a SHORT run costs one small vector op, not a
-    64k-field control scan."""
-    W = 2 + mlen
-    batch = 64
-    while i < n:
-        k_max = min(n - i, (blen - pos) // W, batch)
-        if k_max <= 0:
-            return pos, cur, i
-        starts = pos + W * np.arange(k_max, dtype=np.int64)
-        sb = starts >> 3
-        sr = (starts & 7).astype(np.uint64)
-        # one gather: each field's 16-byte window -> two big-endian u64s
-        win = np.ascontiguousarray(data[sb[:, None] + _SPEC_OFFSETS])
-        lanes = win.view(">u8").astype(np.uint64)
-        c1 = lanes[:, 0]
-        c2 = lanes[:, 1]
-        # the W-bit field left-aligned in a 64-bit word (W <= 66; control
-        # is the top 2 bits, payload the next mlen — payload never needs
-        # bits beyond 64+sr+2 <= 73 < 128)
-        hi = c1 << sr
-        lo = np.where(sr > 0, c2 >> (np.uint64(64) - sr), np.uint64(0))
-        field = hi | lo
-        ok = (field >> np.uint64(62)) == 2
-        first_bad = int(np.argmax(~ok))
-        k = k_max if ok.all() else first_bad
-        if k == 0:
-            return pos, cur, i
-        if mlen <= 62:
-            x = (field[:k] << np.uint64(2)) >> np.uint64(64 - mlen)
-        else:
-            # payload spills past the first 64 aligned bits: redo the
-            # extraction at q = s + 2 (rare window shapes)
-            q = starts[:k] + 2
-            qr = (q & 7).astype(np.uint64)
-            qb = q >> 3
-            win2 = np.ascontiguousarray(data[qb[:, None] + _SPEC_OFFSETS])
-            l2 = win2.view(">u8").astype(np.uint64)
-            hi2 = l2[:, 0] << qr
-            lo2 = np.where(qr > 0, l2[:, 1] >> (np.uint64(64) - qr), np.uint64(0))
-            x = (hi2 | lo2) >> np.uint64(64 - mlen)
-        # XOR cumulative scan: out_j = cur ^ x_1<<t ^ ... ^ x_j<<t
-        vals = np.bitwise_xor.accumulate(x << np.uint64(trail)) ^ np.uint64(cur)
-        out[i:i + k] = vals
-        cur = int(vals[-1])
-        i += k
-        pos += W * k
-        if k < k_max:
-            return pos, cur, i  # hit a non-'10' control — scalar takes over
-        batch = min(batch * 8, 1 << 16)
-    return pos, cur, i
-
-
-def _gather_bits64(data: np.ndarray, starts: np.ndarray) -> np.ndarray:
-    """For each bit position in ``starts``, the 64 bits beginning there,
-    left-aligned in a uint64 (one 16-byte-window gather, two big-endian
-    lanes — same trick as :func:`_speculative_run_decode`). ``data`` must be
-    padded ≥16 bytes past the last start (the decoder's ``datap`` is)."""
-    sb = starts >> 3
-    sr = (starts & 7).astype(np.uint64)
-    win = np.ascontiguousarray(data[sb[:, None] + _SPEC_OFFSETS])
-    lanes = win.view(">u8").astype(np.uint64)
-    hi = lanes[:, 0] << sr
-    lo = np.where(sr > 0, lanes[:, 1] >> (np.uint64(64) - sr), np.uint64(0))
-    return hi | lo
-
-
-def _detect_period(rec: list) -> list | None:
-    """Smallest period p ≤ 8 such that the WHOLE recorded descriptor window
-    is p-periodic; the returned pattern (the last p descriptors) is phase-
-    aligned so the next field expected on the stream is pattern[0]."""
-    m = len(rec)
-    for p in range(1, 9):
-        if all(rec[j] == rec[j + p] for j in range(m - p)):
-            return rec[-p:]
-    return None
-
-
-def _pattern_speculative_decode(
-    data: np.ndarray, pos: int, cur: int, out: np.ndarray, i: int, n: int,
-    blen: int, pattern: list, lead: int, mlen: int, trail: int,
-):
-    """Decode a PERIODIC control pattern in bulk (r5 adversarial-floor work):
-    the scalar loop observed the last descriptors repeating with period p —
-    e.g. a '11' restart at every point with alternating windows (corpus
-    ``flap``), five in-window fields then a repeat (``under6``), or a
-    6-streak broken by a restart (``gate_flap``): exactly the shapes that
-    defeat the uniform-'10'-run speculation. ASSUME the next K periods
-    repeat the same descriptor sequence, verify every field's fixed bits
-    (control + '11' lead/mlen meta + zero-run bits) with per-phase gathers,
-    keep the longest fully-valid prefix of WHOLE periods, and XOR-scan all
-    payload contributions at once. Sound for any input: a field is only
-    consumed if its control/meta bits verified, and window state at each
-    phase is implied by the verified '11' metas (in-window fields reuse the
-    window set by the same-phase restart of the previous period, which
-    verification pins to the recorded lead/mlen).
-
-    Descriptors: ('z', r) = run of r '0' repeats (r ≤ 48, merged);
-    ('w', mlen, trail) = '10' in-window field; ('r', lead, mlen) = '11'
-    restart. Returns (pos, cur, i, lead, mlen, trail) with the window state
-    after the last consumed period (whole periods only, so it is the last
-    'r' of the pattern, or unchanged if the pattern has none)."""
-    specs = []       # (kind, bit-offset, prefix_bits, prefix_val, mlen, trail)
-    out_idx = []     # output column index of each payload phase
-    S = 0            # bits per period
-    T = 0            # output points per period
-    for d in pattern:
-        if d[0] == "z":
-            r = d[1]
-            specs.append(("z", S, r, 0, 0, 0))
-            T += r
-            S += r
-        elif d[0] == "w":
-            specs.append(("w", S, 2, 0b10, d[1], d[2]))
-            out_idx.append(T)
-            T += 1
-            S += 2 + d[1]
-        else:
-            _lead, _mlen = d[1], d[2]
-            pv = (0b11 << 11) | (_lead << 6) | (_mlen & 0x3F)
-            specs.append(("r", S, 13, pv, _mlen, 64 - _lead - _mlen))
-            out_idx.append(T)
-            T += 1
-            S += 13 + _mlen
-    batch = 32
-    while i + T <= n:
-        k_max = min((n - i) // T, (blen - pos) // S, batch)
-        if k_max <= 0:
-            break
-        base = pos + S * np.arange(k_max, dtype=np.int64)
-        valid = np.ones(k_max, dtype=bool)
-        cols = []
-        for kind, off, pb, pv, pm, pt in specs:
-            f64 = _gather_bits64(data, base + off)
-            valid &= (f64 >> np.uint64(64 - pb)) == pv
-            if kind != "z":
-                p64 = _gather_bits64(data, base + off + pb)
-                cols.append((p64 >> np.uint64(64 - pm)) << np.uint64(pt))
-        k = k_max if valid.all() else int(np.argmax(~valid))
-        if k == 0:
-            break
-        Y = np.zeros((k, T), dtype=np.uint64)
-        for j, c in zip(out_idx, cols):
-            Y[:, j] = c[:k]
-        vals = np.bitwise_xor.accumulate(Y.reshape(-1)) ^ np.uint64(cur)
-        out[i:i + k * T] = vals
-        cur = int(vals[-1])
-        i += k * T
-        pos += S * k
-        if k < k_max:
-            break  # a field diverged from the pattern — scalar takes over
-        batch = min(batch * 8, 2048)
-    for d in reversed(pattern):
-        if d[0] == "r":
-            lead, mlen = d[1], d[2]
-            trail = 64 - lead - mlen
-            break
-    return pos, cur, i, lead, mlen, trail
-
-
 def decode_values(blob: bytes) -> np.ndarray:
     r = _BitReader(blob)
     _check_version(r, "value")
@@ -931,45 +612,20 @@ def decode_values(blob: bytes) -> np.ndarray:
     # combines the control reads — '0' costs one 2-bit peek, '10' one peek +
     # one payload read, '11' one peek + one fused 11-bit lead/mlen read +
     # one payload read (was up to 5 method calls per point; ~2.5x decode).
-    # After each decoded '10'/'11' field the speculative bulk path hoovers
-    # the rest of the window run vectorized (_speculative_run_decode).
     data, pos = r.data, r.pos
     blen = 8 * len(data)
     datap = data + b"\x00" * 16  # fixed-width window reads never run short
-    data_np = np.frombuffer(datap, dtype=np.uint8)
-    # speculative-path gate: only engage the vector decoder after a few
-    # consecutive window fields (streak), so repeat-heavy series — whose
-    # '0' controls chop runs short — stay on the cheap scalar loop; and
-    # ADAPT: if the first calls keep finding short runs (below the numpy
-    # call-overhead break-even), disable the bulk path for this blob
-    streak = 0
-    spec_calls = 0
-    spec_consumed = 0
-    spec_on = True
-    # Period-pattern speculation (r5): record a ring of recent field
-    # descriptors; when the window is fully periodic, decode whole periods
-    # in bulk. Covers the mixed-control shapes the uniform-'10' path above
-    # cannot: restart flapping, streaks broken just under the gate, runs
-    # punctuated by repeats. Adaptive like spec_on: detection failures and
-    # low-yield calls disable it for the blob, so aperiodic streams pay a
-    # few hundred points of tuple-append overhead, bounded.
-    rec: list = []
-    pat_on = True
-    pat_fail = 0
-    pat_calls = 0
-    pat_consumed = 0
     from_bytes = int.from_bytes
     lead, mlen, trail = 0, 0, 0
     i = 1
     while i < n:
         if pos >= blen:
             raise ValueError(f"truncated blob: need bit {pos + 1}, have {blen}")
-        # Fused single-window parse (r5, corpus floor work): ONE 11-byte
-        # read holds a COMPLETE field at any alignment — 7 alignment + 2
-        # control + 11 meta + 64 payload = 84 <= 88 bits — so control, '11'
-        # lead/mlen meta, and payload all come out of the same integer
-        # (was up to 3 from_bytes per point; ~2x on control-flapping
-        # series where the bulk path below cannot engage).
+        # Fused single-window parse (r5): ONE 11-byte read holds a COMPLETE
+        # field at any alignment — 7 alignment + 2 control + 11 meta + 64
+        # payload = 84 <= 88 bits — so control, '11' lead/mlen meta, and
+        # payload all come out of the same integer (was up to 3 from_bytes
+        # per point; ~2x on control-flapping series).
         b0 = pos >> 3
         w = from_bytes(datap[b0:b0 + 11], "big")
         wend = (b0 << 3) + 88
@@ -987,21 +643,6 @@ def decode_values(blob: bytes) -> np.ndarray:
                 out[i:i + k] = cur
             pos += k
             i += k
-            streak = 0
-            if pat_on:
-                # merge adjacent repeat runs (one true run can be split by
-                # the 88-bit window); runs too long for 64-bit verification
-                # break any recordable pattern — restart the ring
-                if rec and rec[-1][0] == "z":
-                    r = rec[-1][1] + k
-                    if r > 48:
-                        rec.clear()
-                    else:
-                        rec[-1] = ("z", r)
-                elif k <= 48:
-                    rec.append(("z", k))
-                else:
-                    rec.clear()
             continue
         if pos + 2 > blen:
             raise ValueError(f"truncated blob: need bit {pos + 2}, have {blen}")
@@ -1014,12 +655,8 @@ def decode_values(blob: bytes) -> np.ndarray:
             mlen = (meta & 0x3F) or 64
             trail = 64 - lead - mlen
             fend += mlen
-            if pat_on:
-                rec.append(("r", lead, mlen))
         else:  # '10': reuse the current window
             fend = pos + 2 + mlen
-            if pat_on:
-                rec.append(("w", mlen, trail))
         if fend > blen:
             raise ValueError(f"truncated blob: need bit {fend}, have {blen}")
         x = (w >> (wend - fend)) & ((1 << mlen) - 1)
@@ -1029,40 +666,6 @@ def decode_values(blob: bytes) -> np.ndarray:
         cur = (cur ^ (x << trail)) & 0xFFFFFFFFFFFFFFFF
         out[i] = cur
         i += 1
-        streak += 1
-        if pat_on and len(rec) >= 16:
-            pat = _detect_period(rec)
-            if pat is None:
-                del rec[:8]  # slide: retry after 8 more descriptors
-                pat_fail += 1
-                if pat_fail >= 8:
-                    pat_on = False
-                    rec.clear()
-            else:
-                i0 = i
-                pos, cur, i, lead, mlen, trail = _pattern_speculative_decode(
-                    data_np, pos, cur, out, i, n, blen, pat,
-                    lead, mlen, trail,
-                )
-                rec.clear()
-                streak = 0
-                pat_calls += 1
-                pat_consumed += i - i0
-                if pat_calls >= 4 and pat_consumed < 128 * pat_calls:
-                    pat_on = False
-                continue
-        if spec_on and streak >= 6 and i < n:
-            i0 = i
-            pos, cur, i = _speculative_run_decode(
-                data_np, pos, mlen, trail, cur, out, i, n, blen
-            )
-            streak = 0  # the bulk path stopped at a non-'10' control
-            spec_calls += 1
-            spec_consumed += i - i0
-            if i > i0:
-                rec.clear()  # fields the bulk path consumed were never recorded
-            if spec_calls >= 8 and spec_consumed < 48 * spec_calls:
-                spec_on = False
     return out.view(np.float64)
 
 

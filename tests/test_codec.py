@@ -270,17 +270,17 @@ def test_ts_encode_delta_overflow_raises():
 
 def _adversarial_value_corpus() -> dict[str, np.ndarray]:
     """Standing worst-case corpus for the value decoder (VERDICT r4 #2):
-    deterministic series engineered against each decode fast path.
+    deterministic series that mix the control kinds in adversarial ways.
 
-    * ``flap``       — a window change ('11' control) at EVERY step: the
-                       speculative bulk path never engages.
-    * ``under6``     — in-window runs of exactly 5 then a repeat ('0'):
-                       always one short of the streak>=6 speculation gate.
-    * ``gate_flap``  — runs of exactly 6 then a window change: the gate
-                       fires every time but each speculative call consumes
-                       almost nothing, driving the adaptive disable
-                       (spec_calls>=8, consumed<48/call).
+    * ``flap``       — a window change ('11' control) at EVERY step.
+    * ``under6``     — in-window runs of exactly 5 then a repeat ('0').
+    * ``gate_flap``  — runs of exactly 6 then a window change.
     * ``mixed``      — seeded random interleaving of all control kinds.
+    * ``flap50k``    — 50k-point window flapping from 21.5: every field is
+                       a '11' restart, in one long blob.
+    * ``flap_tail``  — the first half of ``flap50k`` followed by an
+                       aperiodic random tail (a periodic head that stops
+                       repeating mid-stream).
     """
     def bits(u):
         return np.asarray(u, dtype=np.uint64).view(np.float64)
@@ -299,7 +299,7 @@ def _adversarial_value_corpus() -> dict[str, np.ndarray]:
     x = ONE
     for i in range(n):
         if i % 6 == 5:
-            pass  # repeat → '0' control, resets the streak at 5
+            pass  # repeat → '0' control after 5 in-window changes
         else:
             x ^= ((i % 15) + 1) << 8  # same 4-bit window → '10' controls
         under6[i] = x
@@ -308,7 +308,7 @@ def _adversarial_value_corpus() -> dict[str, np.ndarray]:
     x = ONE
     for i in range(n):
         if i % 7 == 6:
-            x ^= 1 << 61  # window change right after a 6-streak
+            x ^= 1 << 61  # window change right after 6 in-window changes
         else:
             x ^= ((i % 15) + 1) << 8
         gate_flap[i] = x
@@ -324,7 +324,7 @@ def _adversarial_value_corpus() -> dict[str, np.ndarray]:
             x ^= 1 << int(rng.integers(52, 63))
         mixed[i] = x
 
-    # r5 pattern-path shapes (period-speculative decoder targets + traps):
+    # periodic shapes:
     # toggle — the REALISTIC flap: a sensor bouncing between two readings
     # (thermostat/status series), xor alternates between one value and
     # itself → period-2 pattern.
@@ -337,8 +337,7 @@ def _adversarial_value_corpus() -> dict[str, np.ndarray]:
             x ^= ((i % 3) + 1) << 8
         p3[i] = x
     # pattern break: strictly periodic, then the pattern DIVERGES mid-
-    # stream — the speculative prefix cut must hand back to scalar exactly
-    # at the divergence (then a new period-3 regime re-engages)
+    # stream into a new period-3 regime
     pbreak = np.empty(n, dtype=np.uint64)
     x = ONE
     for i in range(n):
@@ -348,25 +347,38 @@ def _adversarial_value_corpus() -> dict[str, np.ndarray]:
             x ^= 0x7 << 30
         pbreak[i] = x
 
+    # long window-flapping series: xors alternate between disjoint bit
+    # ranges, so EVERY field is a '11' restart
+    n_long = 50_000
+    flap50k = np.empty(n_long, dtype=np.uint64)
+    x = int(np.array(21.5).view(np.uint64))
+    for j in range(n_long):
+        x ^= (1 << 62) if j % 2 else (0xF << 4)
+        flap50k[j] = x
+    # the same series with a periodic head and an aperiodic tail
+    tail = np.round(np.random.default_rng(5).normal(0, 1, n_long // 2), 3)
+    flap_tail = np.concatenate([bits(flap50k[: n_long // 2]), tail])
+
     out = {"flap": flap, "under6": under6, "gate_flap": gate_flap,
-           "mixed": mixed, "p3": p3, "pbreak": pbreak}
+           "mixed": mixed, "p3": p3, "pbreak": pbreak, "flap50k": flap50k}
     return {**{k: bits(v) for k, v in out.items()},
-            "toggle": toggle.astype(np.float64)}
+            "toggle": toggle.astype(np.float64), "flap_tail": flap_tail}
 
 
 def test_adversarial_decode_corpus_roundtrips():
-    """Every corpus series must round-trip bit-exactly through both the
-    vectorized and (implicitly, via bit-equality elsewhere) scalar paths —
-    these shapes exercise the speculation gate, its adaptive disable, and
-    the control flapping the bulk decoder must fall back from."""
+    """Every corpus series must round-trip bit-exactly through the
+    vectorized encoder (byte-equal to the scalar one, tested elsewhere) and
+    the decoder — these shapes exercise restart flapping, short in-window
+    runs broken by repeats or restarts, and periodic heads that diverge."""
     for name, vs in _adversarial_value_corpus().items():
         out = decode_values(encode_values(vs))
         assert np.array_equal(out.view(np.uint64), vs.view(np.uint64)), name
 
 
 def test_ts_bulk_path_shapes_roundtrip():
-    """Shapes that drive the r5 timestamp bulk decoder (same-bucket dod
-    runs) and its adaptive disable — all must round-trip exactly."""
+    """Long same-bucket dod runs, dense nonzero dods, jitter broken by
+    dod=0, bucket changes mid-run and near-int64 magnitudes — all must
+    round-trip exactly."""
     rng = np.random.default_rng(11)
     shapes = [
         # one long 12-bit-bucket run (alternating cadence, dod = ±1000)
@@ -375,19 +387,18 @@ def test_ts_bulk_path_shapes_roundtrip():
         np.cumsum(3600 + np.tile(
             np.array([7, -3, 9, -11, 5, -7, 13, -9], dtype=np.int64), 2500
         )).astype(np.int64),
-        # jittered with interspersed dod=0 (bulk thrashes → adaptive off)
+        # jittered with interspersed dod=0
         np.cumsum(3600 + rng.integers(-30, 31, 20_000)).astype(np.int64),
-        # bucket CHANGES mid-run (7-bit → 12-bit) — verify must stop at it
+        # bucket CHANGES mid-run (7-bit → 12-bit)
         np.cumsum(np.concatenate([
             3600 + np.tile(np.array([7, -7], dtype=np.int64), 5000),
             3600 + np.tile(np.array([900, -900], dtype=np.int64), 5000),
         ])).astype(np.int64),
-        # near-int64 magnitudes: the checked-cumsum fallback path
+        # near-int64 magnitudes
         (2**62 + np.cumsum(np.tile(
             np.array([7, -3, 9, -11, 5, -7, 13, -9], dtype=np.int64), 1000
         ))).astype(np.int64),
-        # long bucket runs BROKEN by short dod=0 stretches: the bulk
-        # path's zero-run continuation (segment >= 96 → keep bulking)
+        # long bucket runs BROKEN by short dod=0 stretches
         np.cumsum(np.tile(np.concatenate([
             3600 + np.tile(np.array([11, -11], dtype=np.int64), 100),
             np.full(5, 3589, dtype=np.int64),
@@ -418,8 +429,7 @@ def test_ts_decode_checked_cumsum_accepts_valid_extreme_partials():
     """Review r5 regression: a VALID series whose intermediate
     (value - base) partials leave int64 — while every true delta and
     timestamp is in range — must round-trip, not be rejected as corrupt.
-    Alternating dod=±1 with huge deltas drives the same-bucket bulk path
-    into the checked-cumsum fallback."""
+    Alternating dod=±1 with huge deltas, starting near int64 min."""
     deltas = np.empty(16, dtype=object)
     deltas[0::2] = 2**60 - 2**56
     deltas[1::2] = 2**60 - 2**56 + 1  # dod alternates +1/-1 (7-bit bucket)
@@ -447,52 +457,22 @@ def test_ts_decode_corrupt_header_near_int64_edge_raises():
         decode_timestamps(blob)
 
 
-def test_pattern_speculative_path_engages_and_is_exact(monkeypatch):
-    """The r5 period-pattern bulk decoder must (a) actually ENGAGE on a
-    periodic mixed-control stream — not just exist — (b) consume the bulk
-    of the points, and (c) hand partial-verification prefixes back to the
-    scalar loop bit-exactly (divergence mid-stream)."""
-    import numpy as np
+def test_ts_decode_corrupt_payload_overflow_raises():
+    """A valid header (t0 = 2^63 - 50, first delta 1) followed by '1111'
+    64-bit dod fields of +30: the running timestamp leaves int64 inside
+    the dod loop, which must raise instead of wrapping."""
+    from ingestr_spark.compression.gorilla import CODEC_VERSION, _bit_assemble
 
-    import ingestr_spark.compression.gorilla as g
-
-    calls = {"n": 0, "consumed": 0}
-    orig = g._pattern_speculative_decode
-
-    def spy(data, pos, cur, out, i, n, blen, pattern, lead, mlen, trail):
-        r = orig(data, pos, cur, out, i, n, blen, pattern, lead, mlen, trail)
-        calls["n"] += 1
-        calls["consumed"] += r[2] - i
-        return r
-
-    monkeypatch.setattr(g, "_pattern_speculative_decode", spy)
-
-    n = 50_000
-    # window-flapping series: xors alternate between disjoint bit ranges,
-    # so EVERY field is a '11' restart — the uniform-'10' spec path can
-    # never engage, only the period-2 pattern path can go bulk
-    u = np.empty(n, dtype=np.uint64)
-    x = int(np.array(21.5).view(np.uint64))
-    for j in range(n):
-        x ^= (1 << 62) if j % 2 else (0xF << 4)
-        u[j] = x
-    flap = u.view(np.float64)
-    blob = g.encode_values(flap)
-    out = g.decode_values(blob)
-    assert np.array_equal(out.view(np.uint64), flap.view(np.uint64))
-    assert calls["n"] >= 1
-    assert calls["consumed"] > n * 0.9  # the bulk path did the work
-
-    # divergence: periodic half, then aperiodic tail — exactness across the
-    # prefix cut, and the pattern path must have consumed ≥ the periodic part
-    calls["n"] = calls["consumed"] = 0
-    rng = np.random.default_rng(5)
-    tail = np.round(rng.normal(0, 1, n // 2), 3)
-    series = np.concatenate([flap[: n // 2], tail])
-    blob2 = g.encode_values(series)
-    out2 = g.decode_values(blob2)
-    assert np.array_equal(out2.view(np.uint64), series.view(np.uint64))
-    assert calls["consumed"] >= n // 2 - 256
+    n = 8
+    zz = 30 << 1  # zigzag(+30)
+    fields = [CODEC_VERSION, n, 2**63 - 50, 1]
+    widths = [8, 32, 64, 64]
+    for _ in range(n - 2):
+        fields += [0b1111, zz]
+        widths += [4, 64]
+    blob = _bit_assemble(fields, widths)
+    with pytest.raises(ValueError, match="out of int64 range"):
+        decode_timestamps(blob)
 
 
 def test_pattern_decoder_periodic_property():
