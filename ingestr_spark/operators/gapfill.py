@@ -30,8 +30,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ingestr_spark.spine import key_spine
-
 
 def spine_join(
     tier: DataFrame,
@@ -39,21 +37,34 @@ def spine_join(
     bucket_col: str = "bucket",
     step: str = "interval 1 day",
 ) -> DataFrame:
-    """Left-join the tier onto its per-key dense spine; missing buckets
-    surface as all-null measure rows with ``gap = true``.
+    """The tier on its per-key dense spine (``key_spine`` left-joined with
+    the tier); missing buckets surface as all-null measure rows with
+    ``gap = true``.
 
-    The tier is persisted (r7): it feeds both the spine's per-key min/max
-    bounds aggregate and the join probe side, and Catalyst column-prunes
-    the bounds pass to (key, bucket) — a DIFFERENT subtree from the full
-    tier, so runtime exchange reuse cannot deduplicate them and the tier's
-    (often expensive) upstream aggregation ran twice. Tier rows are
-    bounded by keys × calendar buckets, so the cache is small at any raw
-    scale (the reference's per-site frames are the same shape)."""
+    One window pass, so the tier has a single consumer: each row expands
+    to ``sequence(bucket, next bucket of its key, step)``, keeping element
+    0 with the row's measures and the elements before the next bucket as
+    gap rows. Rows with a null bucket are dropped, as the join dropped
+    them. A null key is one more key and keeps its measures (the join never
+    matched it, so all its rows came out as gaps). Precondition: every
+    bucket lies on its key's ``step`` grid (calendar-truncated, or
+    month-15 anchors with ``interval 1 month``); an off-grid bucket would
+    be kept instead of dropped by the join."""
     key_cols = key_cols or ["source"]
-    tier = tier.persist()
-    spine = key_spine(tier, key_cols, bucket_col, step)
-    joined = spine.join(tier, on=[*key_cols, bucket_col], how="left")
-    return joined.withColumn("gap", F.col("n_seq").isNull() if "n_seq" in tier.columns
+    measures = [c for c in tier.columns if c not in (*key_cols, bucket_col)]
+    nxt = F.lead(bucket_col).over(Window.partitionBy(*key_cols).orderBy(bucket_col))
+    own = F.col("_pos") == 0
+    rows = tier.withColumn("_next", nxt).select(
+        *key_cols, *measures, "_next",
+        F.posexplode(F.expr(
+            f"sequence(`{bucket_col}`, coalesce(_next, `{bucket_col}`), {step})"
+        )).alias("_pos", "_b"),
+    ).filter(own | (F.col("_b") < F.col("_next")))
+    spined = rows.select(
+        *key_cols, F.col("_b").alias(bucket_col),
+        *[F.when(own, F.col(c)).alias(c) for c in measures],
+    )
+    return spined.withColumn("gap", F.col("n_seq").isNull() if "n_seq" in tier.columns
                              else F.lit(None).cast("boolean"))
 
 

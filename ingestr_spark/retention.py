@@ -622,9 +622,17 @@ class AggregateStore:
         r6: generic names like ``date``/``dt``/``ds`` usually hold the
         ingest date, and a wrong trust silently misses months on resume).
 
+        The aggregate has one consumer, the write: the months to commit are
+        listed from the job's own output, and the lineage rows are read
+        back from the written tier by :meth:`_log_job_from_data`, like every
+        other data-writing commit. The commit is CAS'd against the snapshot
+        read before the write, so a commit landing mid-build makes this
+        build fail with FileExistsError instead of overwriting it.
+
         Returns the number of month-partitions built this run.
         """
         job_id = self._check_job_id(job_id or uuid.uuid4().hex[:12])
+        cur = self.current_snapshot(tier)  # CAS base for the commit
         agg = (
             rollup_from_raw(source_df, tier)
             if from_tier is None
@@ -638,12 +646,11 @@ class AggregateStore:
                 if discover_from_paths else None
             )
             if cand is None:
-                # Fallback discovery on the UNPERSISTED aggregate: Catalyst
-                # prunes every non-grouping aggregate expression under
-                # select(p_month), so this pass scans only the grouping
-                # columns (ts + key) — a resume with nothing to do costs one
-                # slim scan, never the full token-stat aggregation
-                # (persisting first would materialize ALL columns here).
+                # Fallback discovery: Catalyst prunes every non-grouping
+                # aggregate expression under select(p_month), so this pass
+                # scans only the grouping columns (ts + key) — a resume with
+                # nothing to do costs one slim scan, never the full
+                # token-stat aggregation.
                 cand = {
                     r["p_month"]
                     for r in agg.select("p_month").distinct().collect()
@@ -657,63 +664,34 @@ class AggregateStore:
             # the write realizes anyway — go straight to the full pass (one
             # less source scan; path discovery still guards every RESUME).
             todo = None
-        # The full aggregate feeds TWO consumers (the partition write and
-        # the manifest stats) — persist it so the expensive aggregation runs
-        # once, not per consumer. Tier rows are bounded by keys × calendar
-        # buckets, so the cache is small relative to the source at any scale.
-        agg = agg.persist()
-        try:
-            pending = (
-                agg if todo is None
-                else agg.filter(F.col("p_month").isin(list(todo)))
-            )
-            # explicit repartition on the write-partition key: one shuffle,
-            # each output partition written by few tasks (no small-file storm)
-            data_dir = self.data_path(tier, job_id)
-            t0 = time.time()
-            # cluster by (source, bucket) inside each task (Iceberg write
-            # sort order): row-group/page min-max stats then prune by-source
-            # reads on a FRESH build, not only after compact()
-            pending.repartition("p_month", "source").sortWithinPartitions(
-                "p_month", "source", "bucket"
-            ).write.mode("overwrite").partitionBy("p_month").parquet(data_dir)
-            wall_ms = int((time.time() - t0) * 1000)
-
-            stats = (
-                pending.groupBy("p_month")
-                .agg(F.count(F.lit(1)).alias("n_rows"), F.sum("n_seq").alias("sum_n_seq"))
-                .collect()
-            )
-        finally:
-            agg.unpersist()
+        pending = (
+            agg if todo is None
+            else agg.filter(F.col("p_month").isin(list(todo)))
+        )
+        # explicit repartition on the write-partition key: one shuffle,
+        # each output partition written by few tasks (no small-file storm)
+        data_dir = self.data_path(tier, job_id)
+        t0 = time.time()
+        # cluster by (source, bucket) inside each task (Iceberg write sort
+        # order): row-group/page min-max stats then prune by-source reads on
+        # a FRESH build, not only after compact()
+        pending.repartition("p_month", "source").sortWithinPartitions(
+            "p_month", "source", "bucket"
+        ).write.mode("overwrite").partitionBy("p_month").parquet(data_dir)
+        wall_ms = int((time.time() - t0) * 1000)
         # visibility commit: one snapshot pointing the new months at this
         # job's immutable directory — nothing referenced the files until
         # now. Only months the write REALIZED are published (path-derived
         # candidates may over-approximate; committing an unwritten month
         # would point at a nonexistent dir).
-        realized = sorted(r["p_month"] for r in stats)
+        realized = self._written_months(data_dir)
         if not realized:
             return 0
         self._commit_snapshot(
-            tier,
-            {m: f"{self.data_path(tier, job_id)}/p_month={m}" for m in realized},
-            job_id,
+            tier, {m: f"{data_dir}/p_month={m}" for m in realized}, job_id,
+            base=cur,
         )
-        now = time.time()
-        self._log(
-            tier,
-            [
-                {
-                    "p_month": r["p_month"],
-                    "n_rows": r["n_rows"],
-                    "sum_n_seq": r["sum_n_seq"],
-                    "wall_ms": wall_ms,
-                    "job_id": job_id,
-                    "completed_at": now,
-                }
-                for r in stats
-            ],
-        )
+        self._log_job_from_data(tier, job_id, wall_ms=wall_ms)
         return len(realized)
 
     def build_all(self, raw: DataFrame, tiers: list[str] | None = None) -> dict[str, int]:
@@ -785,12 +763,7 @@ class AggregateStore:
         delta.repartition("p_month", "source").write.mode(
             "overwrite"
         ).partitionBy("p_month").parquet(data_dir)
-        # the write itself is the month discovery: list the job's own output
-        # (no second aggregation pass, no collect over the delta)
-        months = sorted(
-            e.split("=", 1)[1] for e in os.listdir(data_dir)
-            if e.startswith("p_month=")
-        )
+        months = self._written_months(data_dir)
         if not months:
             return []
 
@@ -850,6 +823,16 @@ class AggregateStore:
         self._log_job_from_data(coarser, job_id)
         return months
 
+    @staticmethod
+    def _written_months(data_dir: str) -> list[str]:
+        """The months a job's write realized, listed from its own output
+        dir: the write itself is the month discovery (no second
+        aggregation pass, no collect over the written frame)."""
+        return sorted(
+            e.split("=", 1)[1] for e in os.listdir(data_dir)
+            if e.startswith("p_month=")
+        )
+
     def _reconcile_replayed(self, tier: str, job_id: str) -> bool:
         """The exactly-once replay gate, shared by every committing op: True
         iff ``job_id`` already committed (durable job record or retained
@@ -868,7 +851,7 @@ class AggregateStore:
             self._log_job_from_data(tier, job_id)
         return True
 
-    def _log_job_from_data(self, tier: str, job_id: str) -> None:
+    def _log_job_from_data(self, tier: str, job_id: str, wall_ms: int = 0) -> None:
         """Append manifest rows for a committed job: the POST-state of every
         month the job's snapshot added or changed, read through that PINNED
         version (r6 — deterministic and replay-idempotent even under
@@ -876,7 +859,8 @@ class AggregateStore:
         lineage contract is that each job logs its months' post-state). If
         the job's snapshot or its diff base was already expired by
         :meth:`gc` before a crash-heal got here, the lineage row is
-        unrecoverable — skip rather than crash the replay no-op."""
+        unrecoverable — skip rather than crash the replay no-op.
+        ``wall_ms`` is the job's write time (builds pass it; 0 otherwise)."""
         v = self.version_of_job(tier, job_id)
         if v is None:
             return
@@ -896,7 +880,7 @@ class AggregateStore:
         now = time.time()
         self._log(tier, [
             {"p_month": r["p_month"], "n_rows": r["n_rows"],
-             "sum_n_seq": r["sum_n_seq"], "wall_ms": 0, "job_id": job_id,
+             "sum_n_seq": r["sum_n_seq"], "wall_ms": wall_ms, "job_id": job_id,
              "completed_at": now}
             for r in stats
         ])
@@ -912,7 +896,7 @@ class AggregateStore:
         """Rewrite month-partitions into ``target_files`` coalesced files
         each (Iceberg's ``rewrite_data_files``). Under merge-on-read (r6)
         this is ALSO where a month's delta stack folds back into one base
-        dir: the read recombines base + deltas, the rewrite persists the
+        dir: the read recombines base + deltas, the rewrite stores the
         recombined rows, and the snapshot entry collapses to a single dir —
         bounding both small-file read amplification and stack depth. The
         rewrite follows the store's one commit discipline — rows are read

@@ -17,6 +17,7 @@ from ingestr_spark.operators.gapfill import (
     zero_fill,
 )
 from ingestr_spark.operators.rollup import rollup_from_raw
+from ingestr_spark.spine import key_spine
 
 
 @pytest.fixture(scope="module")
@@ -65,15 +66,70 @@ def test_zero_fill(series):
     assert _vals(out, "b") == [0.0, 7.0, 0.0]
 
 
+def _reference_spine(tier, step):
+    """The spine as a join: each key's dense ``key_spine`` left-joined with
+    the tier, ``gap`` where no tier row landed."""
+    joined = key_spine(tier, ["source"], "bucket", step).join(
+        tier, on=["source", "bucket"], how="left")
+    return joined.withColumn("gap", F.col("n_seq").isNull())
+
+
+def _assert_spine_matches_reference(tier, step):
+    got, want = spine_join(tier, step=step), _reference_spine(tier, step)
+    assert got.schema == want.schema  # names, column order, types, nullability
+    assert sorted(got.collect(), key=repr) == sorted(want.collect(), key=repr)
+
+
 def test_spine_join_introduces_gaps(tok):
     tier = rollup_from_raw(tok, "1d").withColumn("bucket", F.col("bucket").cast("date"))
-    j = spine_join(tier.select("source", "bucket", "n_seq", "sum_n_tok"))
+    tier = tier.select("source", "bucket", "n_seq", "sum_n_tok")
+    j = spine_join(tier)
     n_spine = j.count()
     n_tier = tier.count()
     assert n_spine > n_tier  # sparse input must create gap rows
     assert j.filter("gap").count() == n_spine - n_tier
     # non-gap rows keep their values
     assert j.filter("NOT gap AND sum_n_tok IS NULL").count() == 0
+    _assert_spine_matches_reference(tier, "interval 1 day")
+
+
+_H = dt.datetime(2021, 3, 1)
+SPINE_CASES = {
+    # duplicate (key, bucket) rows, a null bucket, a null measure on a real row
+    "hourly_dups_null_buckets": (
+        "source string, bucket timestamp, n_seq long, v double",
+        [("a", _H, 1, 1.0), ("a", _H, 2, 2.0), ("a", _H + dt.timedelta(hours=3), 1, 3.0),
+         ("a", None, 5, 5.0), ("b", _H + dt.timedelta(hours=5), 1, 4.0),
+         ("b", _H + dt.timedelta(hours=6), None, 6.0),
+         ("b", _H + dt.timedelta(hours=9), 1, None), ("c", None, 1, 1.0)],
+        "interval 1 hour",
+    ),
+    "daily_dates": (
+        "source string, bucket date, n_seq long, v double",
+        [("a", dt.date(2020, 2, 27), 1, 1.0), ("a", dt.date(2020, 3, 2), 2, 2.0),
+         ("b", dt.date(2021, 12, 30), 1, 3.0), ("b", dt.date(2022, 1, 2), 1, 4.0)],
+        "interval 1 day",
+    ),
+    "single_bucket_key": (
+        "source string, bucket date, n_seq long, v double",
+        [("a", dt.date(2021, 6, 1), 1, 10.0), ("b", dt.date(2021, 6, 1), 2, 1.0),
+         ("b", dt.date(2021, 6, 4), 3, 2.0)],
+        "interval 1 day",
+    ),
+    "month15_anchors": (
+        "source string, bucket date, n_seq long, v double",
+        [("a", dt.date(2020, 11, 15), 1, 1.0), ("a", dt.date(2021, 3, 15), 2, 2.0),
+         ("a", dt.date(2021, 4, 15), 3, 3.0), ("b", dt.date(2021, 1, 15), 1, 4.0)],
+        "interval 1 month",
+    ),
+    "empty": ("source string, bucket date, n_seq long, v double", [], "interval 1 day"),
+}
+
+
+@pytest.mark.parametrize("case", sorted(SPINE_CASES))
+def test_spine_join_matches_reference(spark, case):
+    schema, rows, step = SPINE_CASES[case]
+    _assert_spine_matches_reference(spark.createDataFrame(rows, schema), step)
 
 
 def test_doy_climatology_fill(spark):

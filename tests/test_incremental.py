@@ -228,9 +228,10 @@ def test_build_tier_scan_budget_and_cheap_resume(spark, tmp_path):
 
     * fresh build = 1 pass (r7): with no completed months there is nothing
       to skip, so discovery is skipped outright and the single full
-      aggregation is shared by the write and the manifest stats (round 1
-      ran the full aggregation three times; rounds 2-6 still paid a
-      separate discovery pass);
+      aggregation feeds only the write — the committed months are listed
+      from the job's output and the manifest stats read the WRITTEN tier,
+      not the source (round 1 ran the full aggregation three times;
+      rounds 2-6 still paid a separate discovery pass);
     * no-op resume = 1 slim discovery pass ONLY — resuming a completed tier
       must never pay the token-statistics aggregation (a persist-first
       version did, costing the full cascade per no-op resume)."""
@@ -248,7 +249,7 @@ def test_build_tier_scan_budget_and_cheap_resume(spark, tmp_path):
     spied = raw.mapInPandas(counting, raw.schema)
     store = AggregateStore(spark, str(tmp_path / "scan1"))
     store.build_tier("1d", spied)
-    assert acc.value == n  # fresh build: ONE shared full aggregation only
+    assert acc.value == n  # fresh build: ONE full aggregation only
     assert store.build_tier("1d", spied) == 0  # resume: nothing to do
     assert acc.value == 2 * n  # discovery pass only — no full re-aggregation
 

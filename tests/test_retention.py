@@ -10,6 +10,8 @@ from pyspark.sql import functions as F
 
 from ingestr_spark.retention import AggregateStore
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 @pytest.fixture()
 def store(spark, tok, tmp_path):
@@ -29,6 +31,32 @@ def test_resume_skips_completed(store, tok):
     # second run: everything already in the manifest -> zero partitions built
     built = store.build_all(tok, ["1h", "1d", "1mo"])
     assert built == {"1h": 0, "1d": 0, "1mo": 0}
+
+
+def test_build_and_series_query_leave_no_persisted_rdd(spark, tok, tmp_path):
+    """Neither a build nor a gap-filled series query leaves a persisted RDD
+    behind. Compared against the count before, not against 0: the ``tok``
+    fixture persists its frame. Builds still record their write time in
+    the lineage manifest."""
+    from ingestr_spark.operators.gapfill import interpolate_linear, spine_join
+
+    def n_persisted():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    n0 = n_persisted()
+    s = AggregateStore(spark, str(tmp_path / "store_noleak"))
+    s.build_all(tok, ["1h", "1d", "1mo"])
+    assert n_persisted() == n0
+    src = tok.select("source").first()["source"]
+    tier = s.read_tier("1d").filter(F.col("source") == src)
+    rows = interpolate_linear(
+        spine_join(tier.select("source", "bucket", "n_seq", "avg_n_tok")),
+        ["avg_n_tok"],
+    ).collect()
+    assert rows
+    assert n_persisted() == n0
+    for t in ["1h", "1d", "1mo"]:
+        assert s.read_manifest(t).filter("wall_ms <= 0").count() == 0, t
 
 
 def test_resume_after_partial_state(spark, tok, tmp_path):
@@ -226,10 +254,10 @@ def test_concurrent_commit_cas_across_processes(spark, tok, tmp_path):
 
     child = textwrap.dedent("""
         import json, os, sys, time
-        sys.path.insert(0, "/root/repo")
+        sys.path.insert(0, sys.argv[1])
         from ingestr_spark.retention import AggregateStore
 
-        root, name, go_file = sys.argv[1], sys.argv[2], sys.argv[3]
+        root, name, go_file = sys.argv[2], sys.argv[3], sys.argv[4]
         store = AggregateStore(None, root)  # no JVM: snapshot ops are pure-os
         base = store.current_snapshot("1h")  # BOTH read the same base version
         open(go_file + "." + name + ".ready", "w").close()  # handshake out
@@ -249,7 +277,7 @@ def test_concurrent_commit_cas_across_processes(spark, tok, tmp_path):
     go = tmp_path / "go"
     procs = [
         subprocess.Popen(
-            [sys.executable, "-c", child, s.root, name, str(go)],
+            [sys.executable, "-c", child, REPO, s.root, name, str(go)],
             stdout=subprocess.PIPE, text=True,
         )
         for name in ("proc_a", "proc_b")
@@ -271,6 +299,37 @@ def test_concurrent_commit_cas_across_processes(spark, tok, tmp_path):
     # exactly one new version exists and readers resolve it
     assert s.current_snapshot("1h")["version"] == base_version + 1
     assert "2099-01" in s.current_snapshot("1h")["partitions"]
+
+
+def test_build_tier_cas_loses_to_commit_landing_mid_build(spark, tok, tmp_path):
+    """build_tier commits against the snapshot it read before its write: a
+    commit landing while the build writes makes the build fail loudly
+    (FileExistsError) and leaves the intruding snapshot current, instead
+    of silently re-pointing over it. The intruder commits from inside the
+    build's own source scan, through a JVM-less store (snapshot ops are
+    pure-os), once across all tasks (O_EXCL marker)."""
+    root = str(tmp_path / "store_midbuild")
+    marker = str(tmp_path / "intruded")
+    os.makedirs(f"{root}/data/1d/intruder/p_month=2099-01")
+
+    def intrude(batches):
+        try:
+            os.close(os.open(marker, os.O_CREAT | os.O_EXCL | os.O_WRONLY))
+        except FileExistsError:
+            pass
+        else:
+            AggregateStore(None, root)._commit_snapshot(
+                "1d", {"2099-01": "data/1d/intruder/p_month=2099-01"},
+                job_id="intruder")
+        yield from batches
+
+    s = AggregateStore(spark, root)
+    with pytest.raises(FileExistsError):
+        s.build_tier("1d", tok.mapInPandas(intrude, tok.schema), job_id="j-mid")
+    snap = s.current_snapshot("1d")
+    assert snap["job_id"] == "intruder"
+    assert list(snap["partitions"]) == ["2099-01"]
+    assert "j-mid" not in s.committed_job_ids("1d")
 
 
 def test_gc_grace_protects_inflight_commit(spark, tok, tmp_path):
@@ -653,11 +712,11 @@ def test_compact_vs_merge_interleave_cas(spark, tok, tmp_path):
     d2.write.parquet(delta_path)
     child = textwrap.dedent("""
         import sys
-        sys.path.insert(0, "/root/repo")
+        sys.path.insert(0, sys.argv[1])
         from ingestr_spark.retention import AggregateStore
         from ingestr_spark.session import get_spark
 
-        root, delta_path = sys.argv[1], sys.argv[2]
+        root, delta_path = sys.argv[2], sys.argv[3]
         spark = get_spark("ilv-child", master="local[2]",
                           shuffle_partitions=4,
                           extra_conf={"spark.ui.enabled": "false"})
@@ -671,7 +730,7 @@ def test_compact_vs_merge_interleave_cas(spark, tok, tmp_path):
 
     def pausing_commit(tier, updates, job_id, base=None):
         res = subprocess.run(
-            [sys.executable, "-c", child, root, delta_path],
+            [sys.executable, "-c", child, REPO, root, delta_path],
             capture_output=True, text=True, timeout=600,
         )
         assert "MERGED" in res.stdout, res.stderr[-2000:]
