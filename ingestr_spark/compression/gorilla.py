@@ -6,12 +6,19 @@ rolled-up points in continuous-aggregate tables. Formats follow the Gorilla
 paper (Pelkonen et al., VLDB 2015, "Gorilla: A Fast, Scalable, In-Memory
 Time Series Database", §4.1):
 
-* timestamps: header = t0 (64 bit) + first delta (64 bit); then per point a
-  delta-of-delta in variable-length buckets
-  '0' | '10'+7b | '110'+9b | '1110'+12b | '1111'+64b (zigzag-coded),
+* timestamps (v3): header = t0 (64 bit), then for n >= 2 the series'
+  STEP g (64 bit) and the first delta in steps (64 bit); then per point a
+  delta-of-delta in steps in variable-length buckets
+  '0' | '10'+7b | '110'+9b | '1110'+12b | '1111'+64b (zigzag-coded).
+  g is the gcd of the consecutive deltas (1 when every delta is 0), so
+  every delta and dod divides exactly: an hourly tier series with gaps
+  stores its gaps as small multiples of 1 instead of multiples of 3600,
+  which moves them out of the 68-bit '1111' bucket. v2 blobs (no g field,
+  deltas in plain units) still decode, as g = 1.
 * values: v0 raw 64 bit; then XOR with previous:
   '0' if identical; '10' + meaningful bits if they fit the previous
   leading/trailing-zero window; '11' + 6b leading + 6b length + bits.
+  Unchanged since v2; v2 and v3 value blobs decode alike.
 
 NaN encodes fine (it's just a bit pattern; NaN XOR NaN == 0). Round-trip is
 bit-exact on float64 — asserted by tests incl. a hypothesis property.
@@ -32,7 +39,8 @@ maintain_query base store in 75 ms against 42 ms — and no timed
 operation of either workload decodes a blob. 6-9 Mpt/s encode; decode
 rates per shape in PERF.md — a native (Scala/C) kernel remains the
 further upgrade path, interface unchanged. Scalar reference encoders are
-retained and byte-equality is hypothesis-tested, so CODEC_VERSION stays 2.
+retained and byte-equality with the vectorized encoders is
+hypothesis-tested.
 """
 
 from __future__ import annotations
@@ -47,19 +55,24 @@ from pyspark.sql import types as T
 
 # Chunk-format version byte, written first in every blob so stored-format
 # changes fail loudly instead of decoding garbage. v2 = zigzag-symmetric dod
-# bucket ranges (round-2 fix); round-1 blobs were unversioned — their first
-# byte is the high byte of the 32-bit count, i.e. 0x00 for any chunk under
-# 2^24 points, so they are reliably rejected as "unversioned legacy".
-CODEC_VERSION = 2
+# bucket ranges (round-2 fix); v3 = timestamps in units of the series' step
+# (the g header field). Both still decode. Round-1 blobs were unversioned —
+# their first byte is the high byte of the 32-bit count, i.e. 0x00 for any
+# chunk under 2^24 points, so they are reliably rejected as "unversioned
+# legacy".
+CODEC_VERSION = 3
+_DECODABLE_VERSIONS = (2, CODEC_VERSION)
+_INT64_MAX = (1 << 63) - 1
 
 
-def _check_version(r: "_BitReader", what: str) -> None:
+def _check_version(r: "_BitReader", what: str) -> int:
     v = r.read(8)
-    if v != CODEC_VERSION:
+    if v not in _DECODABLE_VERSIONS:
         hint = "unversioned round-1 blob (re-encode the tier)" if v == 0 else "unknown"
         raise ValueError(
-            f"{what} chunk codec version {v} != {CODEC_VERSION} ({hint})"
+            f"{what} chunk codec version {v} not in {_DECODABLE_VERSIONS} ({hint})"
         )
+    return v
 
 
 class _BitWriter:
@@ -163,6 +176,15 @@ def _check_ts_deltas(ts: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     return (d, dd)
 
 
+def _ts_step(deltas: np.ndarray) -> int:
+    """The series' step g: the gcd of its consecutive deltas, so every
+    delta and delta-of-delta is an exact multiple of g. 1 when there is no
+    delta or every delta is 0 — and when the gcd is 2^63 (every nonzero
+    delta is int64 min), which int64 division cannot take."""
+    g = int(np.gcd.reduce(np.abs(deltas).view(np.uint64))) if len(deltas) else 0
+    return g if 0 < g <= _INT64_MAX else 1
+
+
 def encode_timestamps(ts: np.ndarray) -> bytes:
     """ts: int64 array (epoch seconds or any monotone int axis).
 
@@ -170,18 +192,22 @@ def encode_timestamps(ts: np.ndarray) -> bytes:
     NO cross-point state, so every field (bucket-fused control+payload, or
     a split control + 64-bit payload for the '1111' bucket, plus zero-run
     fillers) is computed with numpy and assembled by :func:`_bit_assemble`.
-    Byte-identical to :func:`_encode_timestamps_scalar`
-    (equivalence-tested). Raises ValueError on inputs whose deltas or
-    delta-of-deltas overflow int64 (see :func:`_check_ts_deltas`)."""
+    Deltas and dods are written in units of the series' step
+    (:func:`_ts_step`), which the header carries. Byte-identical to
+    :func:`_encode_timestamps_scalar` (equivalence-tested). Raises
+    ValueError on inputs whose deltas or delta-of-deltas overflow int64
+    (see :func:`_check_ts_deltas`)."""
     ts = np.asarray(ts, dtype=np.int64)
     n = len(ts)
     if n <= 2:
         return _encode_timestamps_scalar(ts)  # scalar runs the check
     deltas, dods = _check_ts_deltas(ts)  # == np.diff(ts), np.diff(deltas)
+    g = _ts_step(deltas)
+    dods = dods // g  # exact: every dod is a multiple of g
     u64 = (1 << 64) - 1
-    field_vals: list[int] = [CODEC_VERSION, n, int(ts[0]) & u64,
-                             int(deltas[0]) & u64]
-    field_bits: list[int] = [8, 32, 64, 64]
+    field_vals: list[int] = [CODEC_VERSION, n, int(ts[0]) & u64, g,
+                             (int(deltas[0]) // g) & u64]
+    field_bits: list[int] = [8, 32, 64, 64, 64]
     nz = np.flatnonzero(dods)
     if len(nz):
         d = dods[nz]
@@ -220,9 +246,9 @@ def encode_timestamps(ts: np.ndarray) -> bytes:
 
 def _encode_timestamps_scalar(ts: np.ndarray) -> bytes:
     """Scalar reference encoder (pre-round-4), kept as the bit-equality
-    oracle for the vectorized path. Enforces the same bounded-delta
-    precondition as the vectorized encoder so the two stay
-    exception-equivalent too."""
+    oracle for the vectorized path (same step header, same step units).
+    Enforces the same bounded-delta precondition as the vectorized encoder
+    so the two stay exception-equivalent too."""
     ts = np.asarray(ts, dtype=np.int64)
     _check_ts_deltas(ts)
     n = len(ts)
@@ -235,8 +261,10 @@ def _encode_timestamps_scalar(ts: np.ndarray) -> bytes:
     if n == 1:
         return w.getvalue()
     deltas = np.diff(ts)
-    w.write(int(deltas[0]) & ((1 << 64) - 1), 64)
-    dods = np.diff(deltas)
+    g = _ts_step(deltas)
+    w.write(g, 64)
+    w.write((int(deltas[0]) // g) & ((1 << 64) - 1), 64)
+    dods = np.diff(deltas) // g
     # Regular cadence dominates real series: every dod==0 is a single '0'
     # bit, so a run of z zeros is ONE write(0, z) call — identical
     # bitstream, O(nonzero dods) Python work instead of O(points).
@@ -266,8 +294,12 @@ def _encode_timestamps_scalar(ts: np.ndarray) -> bytes:
 
 
 def decode_timestamps(blob: bytes) -> np.ndarray:
+    """Inverse of :func:`encode_timestamps`; also reads v2 blobs (no step
+    field, g = 1). Every delta is multiplied back to plain units as an
+    exact python int, so a corrupt step or payload raises ValueError
+    instead of wrapping."""
     r = _BitReader(blob)
-    _check_version(r, "timestamp")
+    version = _check_version(r, "timestamp")
     n = r.read(32)
     # plausibility guard BEFORE allocating: every point costs >= 1 bit, so
     # a corrupt count larger than the blob's bit length would otherwise
@@ -284,12 +316,18 @@ def decode_timestamps(blob: bytes) -> np.ndarray:
     out[0] = t0 - (1 << 64) if t0 >= (1 << 63) else t0
     if n == 1:
         return out
+    g = r.read(64) if version >= 3 else 1
+    if not 1 <= g <= _INT64_MAX:
+        raise ValueError(f"corrupt blob: timestamp step {g} outside 1..2^63-1")
     d = r.read(64)
-    delta = d - (1 << 64) if d >= (1 << 63) else d
+    delta = (d - (1 << 64) if d >= (1 << 63) else d) * g
     try:
         # exact python-int sum: numpy scalar addition would WRAP silently
         # for an adversarial header (t0 near the int64 edge), decoding
-        # wrong values instead of raising (review r5)
+        # wrong values instead of raising (review r5); a v3 step can also
+        # scale the first delta itself beyond int64
+        if not -_INT64_MAX - 1 <= delta <= _INT64_MAX:
+            raise OverflowError
         out[1] = int(out[0]) + delta
     except OverflowError as e:
         raise ValueError("corrupt blob: value out of int64 range") from e
@@ -301,14 +339,14 @@ def decode_timestamps(blob: bytes) -> np.ndarray:
     prev = int(out[1])
     i = 2
     try:
-        return _decode_ts_loop(data, pos, blen, n, delta, prev, out, i)
+        return _decode_ts_loop(data, pos, blen, n, g, delta, prev, out, i)
     except OverflowError as e:
         # only corrupt payloads can push the accumulators outside int64
         # (valid encodes of int64 inputs round-trip in range)
         raise ValueError("corrupt blob: value out of int64 range") from e
 
 
-def _decode_ts_loop(data, pos, blen, n, delta, prev, out, i):
+def _decode_ts_loop(data, pos, blen, n, g, delta, prev, out, i):
     """Fused-window loop (r5, same rework as decode_values): ONE 11-byte
     read holds a complete field at any alignment (7 alignment + 4 control
     + 64 payload = 75 <= 88 bits). A run of '0' controls is a dod=0
@@ -317,11 +355,12 @@ def _decode_ts_loop(data, pos, blen, n, delta, prev, out, i):
     took 8 at a time). The endpoint is range-checked with exact python
     ints; intermediates are bounded by the monotonic endpoints, so int64
     wrap arithmetic inside numpy stays exact. Every nonzero dod is one
-    scalar step on exact python ints; a running value outside int64 fails
-    the ``out[i]`` store with OverflowError."""
+    scalar step on exact python ints (the dod in steps times ``g``); a
+    running value outside int64 fails the ``out[i]`` store with
+    OverflowError."""
     from_bytes = int.from_bytes
     _PAYLOAD = (0, 7, 9, 12, 64)
-    INT64_MAX = 0x7FFFFFFFFFFFFFFF
+    INT64_MAX = _INT64_MAX
     datap = data + b"\x00" * 16  # fixed-width window reads never run short
     while i < n:
         if pos >= blen:
@@ -363,8 +402,7 @@ def _decode_ts_loop(data, pos, blen, n, delta, prev, out, i):
             raise ValueError(f"truncated blob: need bit {fend}, have {blen}")
         u = (w >> (wend - fend)) & ((1 << nbits) - 1)
         pos = fend
-        dod = (u >> 1) ^ -(u & 1)
-        delta += dod
+        delta += ((u >> 1) ^ -(u & 1)) * g
         prev += delta
         out[i] = prev
         i += 1
@@ -462,7 +500,7 @@ def encode_values(vals: np.ndarray) -> bytes:
     walk therefore self-monitors restart density and bails to the
     byte-identical :func:`_encode_values_scalar` (≈1 Mpt/s floor) when
     runs are short. Byte-identical output either way
-    (hypothesis-equivalence-tested), so CODEC_VERSION stays 2."""
+    (hypothesis-equivalence-tested)."""
     bits = np.asarray(vals, dtype=np.float64).view(np.uint64)
     n = len(bits)
     if n == 0:

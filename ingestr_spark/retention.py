@@ -90,22 +90,26 @@ MANIFEST_SCHEMA = (
     "job_id string, completed_at double"
 )
 
+#: the fixed tier-row schema every data dir is written with: the rollup
+#: accumulators over the raw table's ``n_tok int`` / ``tokens array<int>``
+#: columns (datagen's contract) and the two derived doubles, in written
+#: order. Declaring it at read time skips parquet schema inference, which
+#: cost one Spark job per tier and read shape on every fresh store object
+#: (the streaming sink opens one per drain). Stacked months are read from
+#: their leaf dirs, without a partition column; single-dir months are read
+#: under a basePath and get p_month from the directory name.
+TIER_SCHEMA = (
+    "source string, bucket timestamp, n_seq long, sum_n_tok long, "
+    "min_n_tok int, max_n_tok int, tok_sum long, tok_min int, tok_max int, "
+    "qc_ok_cnt long, avg_n_tok double, qc_frac double"
+)
+TIER_SCHEMA_BASEPATH = TIER_SCHEMA + ", p_month string"
+
 
 class AggregateStore:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root.rstrip("/")
-        # r7: per-(tier, read-shape) schema cache for data-dir reads. Every
-        # job dir of a tier is written with the same engine-controlled
-        # columns, so after the first inferred read the schema is declared
-        # explicitly and parquet schema inference (a driver/job round-trip
-        # per read) is skipped — read_tier on a many-month snapshot issues
-        # one read per owning job dir, so this removes O(job dirs) small
-        # jobs from every store read. Parquet columns resolve BY NAME, so a
-        # cached column order never misreads a file. Cache lives per store
-        # instance (cleared with it); introducing schema evolution would
-        # key this by snapshot schema version.
-        self._schema_cache: dict[tuple[str, bool], object] = {}
 
     # ---- paths ----------------------------------------------------------
     def data_path(self, tier: str, job_id: str) -> str:
@@ -409,27 +413,18 @@ class AggregateStore:
         os.rename(tmp, f"{dest}/{uuid.uuid4().hex}.parquet")
 
     # ---- reads ------------------------------------------------------------
-    def _read_data_dirs(
-        self, tier: str, dirs: list[str], base_path: str | None
-    ) -> DataFrame:
-        """Read a set of month data dirs, declaring the tier schema when it
-        is already known (see ``_schema_cache`` in ``__init__``). The two
-        read shapes differ: with ``base_path`` the p_month partition column
-        is derived from the directory names (single-dir months); without it
-        the given paths ARE the leaf month dirs and no partition column
-        appears (stacked months — read_tier re-adds p_month after the
-        recombine)."""
-        key = (tier, base_path is not None)
-        r = self.spark.read
-        if base_path is not None:
-            r = r.option("basePath", base_path)
-        cached = self._schema_cache.get(key)
-        if cached is not None:
-            r = r.schema(cached)
-        df = r.parquet(*sorted(dirs))
-        if cached is None:
-            self._schema_cache[key] = df.schema
-        return df
+    def _read_data_dirs(self, dirs: list[str], base_path: str | None) -> DataFrame:
+        """Read a set of month data dirs under the declared tier schema
+        (:data:`TIER_SCHEMA`). With ``base_path`` the p_month partition
+        column is derived from the directory names (single-dir months);
+        without it the given paths ARE the leaf month dirs and no partition
+        column appears (stacked months)."""
+        if base_path is None:
+            return self.spark.read.schema(TIER_SCHEMA).parquet(*sorted(dirs))
+        return (
+            self.spark.read.option("basePath", base_path)
+            .schema(TIER_SCHEMA_BASEPATH).parquet(*sorted(dirs))
+        )
 
     def read_tier(
         self,
@@ -474,14 +469,14 @@ class AggregateStore:
         for d in singles:
             by_job.setdefault(os.path.dirname(d), []).append(d)
         frames = [
-            self._read_data_dirs(tier, dirs, base_path=job_dir)
+            self._read_data_dirs(dirs, base_path=job_dir)
             for job_dir, dirs in sorted(by_job.items())
         ]
         if stacked:
             # stacked months: one scan over every dir of every stack (each
             # dir holds exactly one month's rows, so no cross-month bleed),
             # then the same-grain algebraic recombine
-            raw = self._read_data_dirs(tier, stacked, base_path=None)
+            raw = self._read_data_dirs(stacked, base_path=None)
             rec = recombine(raw).withColumn(
                 "p_month", F.date_format("bucket", "yyyy-MM")
             )
@@ -519,22 +514,13 @@ class AggregateStore:
         RECOMBINED month, not the appended delta) — which
         is exactly what a downstream cascade consumer needs to recompute
         (coarser tiers recombine whole months algebraically). Returns an
-        empty DataFrame with the tier schema when nothing changed — schema
-        from the to-snapshot, or any retained snapshot when that one holds
-        no partitions (retention can empty a tier); raises only when the
-        tier has never held data anywhere (no schema to synthesize)."""
+        empty DataFrame with the tier schema when nothing changed, even
+        when the to-snapshot holds no partitions (retention can empty a
+        tier)."""
         d = self.snapshot_diff(tier, from_version, to_version)
         months = sorted(set(d["added"]) | set(d["changed"]))
         if not months:
-            for v in [to_version, *reversed(self._snapshot_versions(tier))]:
-                try:
-                    return self.read_tier(tier, version=v).limit(0)
-                except FileNotFoundError:
-                    continue
-            raise FileNotFoundError(
-                f"tier {tier}: nothing changed, and no retained snapshot "
-                "holds a partition to take the empty result's schema from"
-            )
+            return self.spark.createDataFrame([], TIER_SCHEMA_BASEPATH)
         return self.read_tier(tier, months=months, version=to_version)
 
     # ---- tier build with checkpoint/resume --------------------------------
@@ -788,12 +774,13 @@ class AggregateStore:
     ) -> list[str]:
         """Diff-driven continuous-aggregate maintenance (r5): recompute the
         coarser tier for EXACTLY the months the finer tier added or changed
-        since ``since_version``, sourced through :meth:`read_changes`.
+        since ``since_version`` (:meth:`snapshot_diff`).
         Month-partitions align across tiers (every tier's ``p_month`` is the
-        calendar month of its bucket), and a finer month-partition always
-        holds the FULL month after any merge (copy-on-write granularity), so
-        each affected coarser month is recomputed whole from the finer rows —
-        no cross-month state, no touching unaffected partitions.
+        calendar month of its bucket). Under merge-on-read a changed finer
+        month may be a dir stack (base + deltas); :meth:`read_tier`
+        recombines the stack, so the source is the FULL month either way
+        and each affected coarser month is recomputed whole from it — no
+        cross-month state, no touching unaffected partitions.
 
         Same exactly-once shape as :meth:`incremental_update`: a replayed
         ``job_id`` that already committed reconciles the manifest and

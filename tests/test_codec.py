@@ -225,6 +225,14 @@ def test_gorilla_decoders_fuzz_clean_errors():
     rng = np.random.default_rng(31)
     ts_blob = encode_timestamps(np.arange(0, 6000, 60, dtype=np.int64))
     v_blob = encode_values(np.round(rng.normal(0, 1, 100), 2))
+    # v3 blobs with a step > 1: hourly points with gaps, and one with
+    # mixed-sign deltas in steps of 7 s (own generator: the random and
+    # mutated corpus above and below stays what it was)
+    rng3 = np.random.default_rng(32)
+    gap_blob = encode_timestamps(
+        1_704_067_200 + 3600 * np.cumsum(rng3.integers(1, 40, 100))
+    )
+    mixed_blob = encode_timestamps(7 * np.cumsum(rng3.integers(-900, 900, 100)))
     for _ in range(300):
         blob = bytes(rng.integers(0, 256, int(rng.integers(0, 80)),
                                   dtype=np.uint8))
@@ -233,7 +241,13 @@ def test_gorilla_decoders_fuzz_clean_errors():
                 dec(blob)
             except ValueError:
                 pass
-    for blob, dec in ((ts_blob, decode_timestamps), (v_blob, decode_values)):
+        try:  # random payloads behind a v3 version byte
+            decode_timestamps(bytes([3]) + blob)
+        except ValueError:
+            pass
+    for blob, dec in ((ts_blob, decode_timestamps), (v_blob, decode_values),
+                      (gap_blob, decode_timestamps),
+                      (mixed_blob, decode_timestamps)):
         for _ in range(300):
             b = bytearray(blob)
             b[int(rng.integers(0, len(b)))] ^= int(rng.integers(1, 256))
@@ -443,12 +457,11 @@ def test_ts_decode_checked_cumsum_accepts_valid_extreme_partials():
 
 def test_ts_decode_corrupt_header_near_int64_edge_raises():
     """Review r5: a crafted blob whose header t0 + first delta leaves
-    int64 must raise, not silently wrap (numpy scalar addition wraps)."""
-    from ingestr_spark.compression.gorilla import CODEC_VERSION
-
+    int64 must raise, not silently wrap (numpy scalar addition wraps).
+    The blob has the v2 layout (no step field), which still decodes."""
     t0 = 2**63 - 1
     blob = (
-        bytes([CODEC_VERSION])
+        bytes([2])
         + (2).to_bytes(4, "big")       # n = 2
         + t0.to_bytes(8, "big")        # first value at the int64 edge
         + (1).to_bytes(8, "big")       # first delta = 1 → t1 = 2^63 (!)
@@ -460,12 +473,13 @@ def test_ts_decode_corrupt_header_near_int64_edge_raises():
 def test_ts_decode_corrupt_payload_overflow_raises():
     """A valid header (t0 = 2^63 - 50, first delta 1) followed by '1111'
     64-bit dod fields of +30: the running timestamp leaves int64 inside
-    the dod loop, which must raise instead of wrapping."""
-    from ingestr_spark.compression.gorilla import CODEC_VERSION, _bit_assemble
+    the dod loop, which must raise instead of wrapping. The blob has the
+    v2 layout (no step field), which still decodes."""
+    from ingestr_spark.compression.gorilla import _bit_assemble
 
     n = 8
     zz = 30 << 1  # zigzag(+30)
-    fields = [CODEC_VERSION, n, 2**63 - 50, 1]
+    fields = [2, n, 2**63 - 50, 1]
     widths = [8, 32, 64, 64]
     for _ in range(n - 2):
         fields += [0b1111, zz]
@@ -520,3 +534,178 @@ def test_pattern_decoder_periodic_property():
         assert np.array_equal(out.view(np.uint64), vs.view(np.uint64))
 
     check()
+
+
+# ---- v3: timestamps in units of the series' step ---------------------------
+
+#: blobs written by the v2 encoder (before the step header): hourly points
+#: with gaps — every nonzero delta-of-delta in the 68-bit bucket — and a
+#: short value series, with the arrays they encode
+_V2_TS_HEX = (
+    "020000000a00000000659200800000000000000e1078000000000001c2078000000000"
+    "001c1ff80000000000143707800000000001436ff800000000003bc407800000000003"
+    "bc3f80"
+)
+_V2_TS = 1_704_067_200 + 3600 * np.array(
+    [0, 1, 2, 5, 6, 30, 31, 100, 101, 102], dtype=np.int64
+)
+_V2_VALS_HEX = "02000000063ff8000000000000613bffdc07400780fc00f850806b"
+_V2_VALS = np.array([1.5, 1.5, 2.25, -3.75, 0.0, 21.5])
+
+
+def _ts_step_field(blob: bytes) -> int:
+    """The v3 header's step g: after version (1 B), count (4 B), t0 (8 B)."""
+    return int.from_bytes(blob[13:21], "big")
+
+
+def test_v2_blobs_still_decode():
+    assert np.array_equal(decode_timestamps(bytes.fromhex(_V2_TS_HEX)), _V2_TS)
+    assert np.array_equal(
+        decode_values(bytes.fromhex(_V2_VALS_HEX)).view(np.uint64),
+        _V2_VALS.view(np.uint64),
+    )
+    # the same points in steps of 3600 s fit every dod in the 9-bit bucket
+    v3 = encode_timestamps(_V2_TS)
+    assert v3[0] == 3 and _ts_step_field(v3) == 3600
+    assert len(v3) < len(bytes.fromhex(_V2_TS_HEX)) // 1.5
+
+
+def _daily_across_month_ends() -> np.ndarray:
+    days = np.arange(
+        np.datetime64("2024-01-27"), np.datetime64("2024-05-03"),
+        np.timedelta64(1, "D"),
+    )
+    days = days[np.arange(len(days)) % 9 != 4]  # gaps
+    return days.astype("datetime64[s]").astype(np.int64)
+
+
+_STEP_SHAPES = {
+    # name: (timestamps, expected step; None = no step field)
+    "empty": ([], None),
+    "one": ([42], None),
+    "two": ([100, 7300], 7200),
+    "two_down": ([7300, 100], 7200),
+    "all_equal": ([1_704_067_200] * 50, 1),
+    "mixed_sign": (1_704_067_200 + 3600 * np.array([0, 2, 1, 5, 3, 3, 4, 9]), 3600),
+    "gcd_1": ([0, 3600, 7201, 10801, 14401], 1),
+    "hourly_gaps": (
+        1_704_067_200 + 3600 * np.cumsum(
+            np.random.default_rng(3).integers(1, 200, 2_000)
+        ),
+        3600,
+    ),
+    "daily_month_ends": (_daily_across_month_ends(), 86400),
+    "near_plus_2_62": ([-(2**62), 0, 2**62, 2**62 + 2**61], 2**61),
+    "near_minus_2_62": ([2**62, 0, -(2**62), -(2**62) - 2**61], 2**61),
+    # the one delta is int64 min: its gcd 2^63 does not fit, so plain units
+    "int64_min_delta": ([2**62, -(2**62)], 1),
+}
+
+
+@pytest.mark.parametrize("name", list(_STEP_SHAPES))
+def test_ts_step_shapes_roundtrip_and_bitequal(name):
+    """Step detection: every shape round-trips bit-exact, both encoders
+    write the same bytes, and the header carries the expected step."""
+    from ingestr_spark.compression.gorilla import _encode_timestamps_scalar
+
+    xs, step = _STEP_SHAPES[name]
+    ts = np.asarray(xs, dtype=np.int64)
+    blob = encode_timestamps(ts)
+    assert blob == _encode_timestamps_scalar(ts)
+    assert blob[0] == 3
+    assert np.array_equal(decode_timestamps(blob), ts)
+    if step is None:
+        assert len(blob) == 5 + 8 * len(ts)  # header + t0, no step field
+    else:
+        assert _ts_step_field(blob) == step
+
+
+@settings(max_examples=100, deadline=None)
+@given(
+    st.sampled_from([1, 7, 60, 3600, 86400, 2**40]),
+    st.integers(-2**40, 2**40),
+    st.lists(st.integers(-50, 50), max_size=120),
+)
+def test_ts_step_units_bitequal_property(step, t0, ks):
+    """Series on a step grid (any sign, repeats, gaps): the vectorized and
+    scalar encoders agree byte for byte and the round trip is exact."""
+    from ingestr_spark.compression.gorilla import _encode_timestamps_scalar
+
+    ts = t0 + step * np.cumsum([0, *ks]).astype(np.int64)
+    blob = encode_timestamps(ts)
+    assert blob == _encode_timestamps_scalar(ts)
+    assert np.array_equal(decode_timestamps(blob), ts)
+
+
+def _v3_ts_blob(n, t0, g, delta_steps, dod_fields=(), tail_zeros=0):
+    """Hand-built v3 timestamp blob: header, then (value, width) fields."""
+    from ingestr_spark.compression.gorilla import _bit_assemble
+
+    u64 = (1 << 64) - 1
+    vals = [3, n, t0 & u64, g, delta_steps & u64]
+    widths = [8, 32, 64, 64, 64]
+    for v, w in dod_fields:
+        vals.append(v)
+        widths.append(w)
+    if tail_zeros:
+        vals.append(0)
+        widths.append(tail_zeros)
+    return _bit_assemble(vals, widths)
+
+
+def test_ts_decode_v3_corrupt_step_raises():
+    """A v3 step of 0 or beyond int64 is corrupt; a valid-looking step
+    that multiplies a delta out of int64 — in the header, in a dod field
+    or in a run of dod = 0 — raises instead of wrapping."""
+    for g in (0, 2**63, 2**64 - 1):
+        with pytest.raises(ValueError, match="step"):
+            decode_timestamps(_v3_ts_blob(3, 0, g, 1, tail_zeros=1))
+    # header: t0 + 2 * 2^62 = 2^63
+    with pytest.raises(ValueError, match="out of int64 range"):
+        decode_timestamps(_v3_ts_blob(2, 0, 2**62, 2))
+    # header: one step of -2^62 from t0 = -2^63 leaves int64 below
+    with pytest.raises(ValueError, match="out of int64 range"):
+        decode_timestamps(_v3_ts_blob(2, -(2**63), 2**62, -1))
+    # header: 2 steps of 2^63 - 1 from t0 = -2^63 land in range (2^63 - 2),
+    # but the delta itself (2^64 - 2) is not an int64 — no encoder output
+    with pytest.raises(ValueError, match="out of int64 range"):
+        decode_timestamps(_v3_ts_blob(2, -(2**63), 2**63 - 1, 2))
+    # dod fields of +1 step ('10' + zigzag 2) with g = 2^60: the deltas
+    # grow 2^60, 2^61, 3 * 2^60, ... and the running value leaves int64
+    plus1 = ((0b10 << 7) | 2, 9)
+    with pytest.raises(ValueError, match="out of int64 range"):
+        decode_timestamps(_v3_ts_blob(8, 0, 2**60, 1, [plus1] * 6))
+    # a run of dod = 0 with g = 2^61: 2^61, 2^62, 3 * 2^61, 2^63 (!)
+    with pytest.raises(ValueError, match="out of int64 range"):
+        decode_timestamps(_v3_ts_blob(8, 0, 2**61, 1, tail_zeros=6))
+    # the same blobs one point shorter stay in range and decode
+    assert decode_timestamps(_v3_ts_blob(3, 0, 2**61, 1, tail_zeros=1))[-1] == 2**62
+
+
+@pytest.mark.usefixtures("spark")
+def test_compress_tier_blobs_equal_in_process_encoders(spark, tok):
+    """``compress_tier`` writes, per (source, year) series, exactly the
+    bytes the in-process encoders give for that series in time order."""
+    from pyspark.sql import functions as F
+
+    from ingestr_spark.operators.rollup import rollup_from_raw
+
+    tier = rollup_from_raw(tok, "1h")
+    packed = compress_tier(tier, value_col="avg_n_tok").collect()
+    pdf = tier.select(
+        "source", F.expr("year(bucket)").alias("chunk"),
+        F.col("bucket").cast("long").alias("t"), "avg_n_tok",
+    ).toPandas().sort_values("t")
+    series = {k: g for k, g in pdf.groupby(["source", "chunk"])}
+    assert len(packed) == len(series)
+    steps = set()
+    for row in packed:
+        g = series[(row["source"], row["chunk"])]
+        ts = g["t"].to_numpy(dtype="int64")
+        assert bytes(row["ts_dod"]) == encode_timestamps(ts)
+        assert bytes(row["vals_gorilla"]) == encode_values(
+            g["avg_n_tok"].to_numpy(dtype="float64")
+        )
+        if len(ts) > 1:
+            steps.add(_ts_step_field(bytes(row["ts_dod"])))
+    assert steps and all(s % 3600 == 0 for s in steps)

@@ -59,6 +59,43 @@ def test_build_and_series_query_leave_no_persisted_rdd(spark, tok, tmp_path):
         assert s.read_manifest(t).filter("wall_ms <= 0").count() == 0, t
 
 
+def test_fresh_store_read_tier_starts_no_job(spark, tok, tmp_path):
+    """A fresh store object's ``read_tier`` declares the tier schema instead
+    of inferring it, so building the read plan starts no Spark job — for
+    single-dir months (basePath read) and stacked months (leaf-dir read)
+    alike — and the result schema is the written one."""
+    from ingestr_spark.retention import TIER_SCHEMA_BASEPATH
+    from pyspark.sql.types import _parse_datatype_string
+
+    # a few months only: more than 32 month dirs in one read would start
+    # Spark's parallel file-listing job, which is not schema inference
+    months = sorted(
+        r["m"] for r in tok.select(F.date_format("ts", "yyyy-MM").alias("m"))
+        .distinct().collect()
+    )[:4]
+    sub = tok.filter(F.date_format("ts", "yyyy-MM").isin(months))
+    root = str(tmp_path / "store_schema")
+    AggregateStore(spark, root).build_all(sub, ["1h", "1d", "1mo"])
+    AggregateStore(spark, root).incremental_update("1h", sub.limit(20))
+    sc = spark.sparkContext
+    group = "test-fresh-store-read-tier"
+    sc.setJobGroup(group, group)
+    try:
+        fresh = AggregateStore(spark, root)
+        frames = {t: fresh.read_tier(t) for t in ["1h", "1d", "1mo"]}
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert any(
+        len(e) > 1 for e in fresh.current_snapshot("1h")["partitions"].values()
+    )  # the 1h read covered a stacked month
+    want = _parse_datatype_string(TIER_SCHEMA_BASEPATH)
+    for t, df in frames.items():
+        assert df.schema == want, t
+        assert df.count() > 0, t
+
+
 def test_resume_after_partial_state(spark, tok, tmp_path):
     s = AggregateStore(spark, str(tmp_path / "store2"))
     s.build_tier("1h", tok)  # only first tier done, then "crash"
