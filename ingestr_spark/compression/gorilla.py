@@ -766,7 +766,8 @@ def decompress_tier(
     bucket_col: str = "bucket",
 ) -> DataFrame:
     """Inverse of :func:`compress_tier`: explode binary chunks back to
-    (key, bucket, value) rows."""
+    (key, bucket, value) rows. Each packed row decodes where it is read,
+    one Arrow batch at a time — no shuffle."""
     key_cols = key_cols or ["source"]
     out_schema = T.StructType(
         [df.schema[c] for c in key_cols]
@@ -776,20 +777,18 @@ def decompress_tier(
         ]
     )
 
-    def unpack(pdf: pd.DataFrame) -> pd.DataFrame:
-        frames = []
-        for _, row in pdf.iterrows():
-            ts = decode_timestamps(bytes(row["ts_dod"]))
-            vs = decode_values(bytes(row["vals_gorilla"]))
-            fr = pd.DataFrame({
-                bucket_col: pd.to_datetime(ts, unit="s"),
-                value_col: vs,
-            })
-            for c in key_cols:
-                fr[c] = row[c]
-            frames.append(fr[[*key_cols, bucket_col, value_col]])
-        if not frames:
-            return pd.DataFrame(columns=[*key_cols, bucket_col, value_col])
-        return pd.concat(frames, ignore_index=True)
+    def unpack(batches):
+        for pdf in batches:
+            ts = [decode_timestamps(bytes(b)) for b in pdf["ts_dod"]]
+            vs = [decode_values(bytes(b)) for b in pdf["vals_gorilla"]]
+            n = [len(t) for t in ts]
+            out = {c: np.repeat(pdf[c].to_numpy(), n) for c in key_cols}
+            out[bucket_col] = pd.to_datetime(
+                np.concatenate([np.empty(0, np.int64), *ts]), unit="s"
+            )
+            out[value_col] = np.concatenate([np.empty(0, np.float64), *vs])
+            yield pd.DataFrame(out)
 
-    return df.groupBy(*key_cols).applyInPandas(unpack, out_schema)
+    return df.select(*key_cols, "ts_dod", "vals_gorilla").mapInPandas(
+        unpack, out_schema
+    )

@@ -128,7 +128,10 @@ def rollup_cascade(tier_df: DataFrame, to_tier: str, key: str = "source") -> Dat
     ``cascade(raw→1h→1d) == rollup_from_raw(raw, '1d')`` EXACTLY — the
     equivalence the reference tests per-site-vs-combined
     (tests/testthat/test_CRU_WFDEI_NDEP.R:131-195) and our tests assert per
-    partitioning level.
+    partitioning level. The input need not hold one row per (key, bucket):
+    a store's stored rows, merge-on-read stacks unmerged, go in as they
+    are, and this one aggregation is also their merge (the accumulators
+    are the ones :func:`recombine` composes).
     """
     out = tier_df.groupBy(
         F.col(key).alias("source"),

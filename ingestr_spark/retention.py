@@ -426,6 +426,32 @@ class AggregateStore:
             .schema(TIER_SCHEMA_BASEPATH).parquet(*sorted(dirs))
         )
 
+    def _month_dirs(
+        self, tier: str, months: list[str] | None, version: int | None = None
+    ) -> list[list[str]]:
+        """The absolute data dirs of each selected month of a snapshot: one
+        dir, or a merge-on-read stack. Raises FileNotFoundError when no
+        month is selected."""
+        parts = self.snapshot(tier, version)["partitions"]
+        if months is not None:
+            parts = {m: e for m, e in parts.items() if m in months}
+        if not parts:
+            raise FileNotFoundError(
+                f"tier {tier}: no committed partitions"
+                + (f" at snapshot v{version}" if version is not None else "")
+            )
+        return [
+            [self._resolve(d) for d in self._entry_dirs(e)]
+            for e in parts.values()
+        ]
+
+    def _read_stored(self, tier: str, months: list[str] | None = None) -> DataFrame:
+        """The selected months' STORED rows: every dir of every stack,
+        unmerged (several partial rows per (source, bucket) in a stacked
+        month). The cascades' input; ``rollup_cascade`` is their merge."""
+        dirs = [d for month in self._month_dirs(tier, months) for d in month]
+        return self._read_data_dirs(dirs, base_path=None)
+
     def read_tier(
         self,
         tier: str,
@@ -449,20 +475,10 @@ class AggregateStore:
         is over TIER rows of the stacked months only (bounded by keys ×
         calendar buckets, never raw-scale), and compaction cadence bounds
         stack depth."""
-        parts = self.snapshot(tier, version)["partitions"]
-        if months is not None:
-            parts = {m: e for m, e in parts.items() if m in months}
-        if not parts:
-            raise FileNotFoundError(
-                f"tier {tier}: no committed partitions"
-                + (f" at snapshot v{version}" if version is not None else "")
-            )
         singles: list[str] = []
         stacked: list[str] = []
-        for entry in parts.values():
-            dirs = [self._resolve(d) for d in self._entry_dirs(entry)]
+        for dirs in self._month_dirs(tier, months, version):
             (singles if len(dirs) == 1 else stacked).extend(dirs)
-        frames = []
         # group single-dir months by their owning job dir so each read keeps
         # the p_month partition column (basePath) and the plan stays small
         by_job: dict[str, list[str]] = {}
@@ -531,8 +547,7 @@ class AggregateStore:
     #: built over such input would silently discover wrong candidate months
     #: (missed months on build/resume, never wrong data — the commit only
     #: publishes realized months — but a resume would re-scan forever).
-    #: Sources partitioned by a key that really IS the event date opt in via
-    #: ``build_tier(partition_keys={...})``.
+    #: Such sources pass ``build_tier(discover_from_paths=False)``.
     _DATE_PARTITION_KEYS = frozenset({"p_month", "p_day", "p_date"})
     #: tiers whose bucket never leaves the row's calendar month, so a file's
     #: date-partition month IS its buckets' p_month (week buckets cross month
@@ -540,10 +555,7 @@ class AggregateStore:
     _PATH_MONTH_TIERS = frozenset({"1h", "1d", "1mo"})
 
     @classmethod
-    def _months_from_input_files(
-        cls, df: DataFrame, tier: str,
-        partition_keys: frozenset[str] | set[str] | None = None,
-    ) -> set[str] | None:
+    def _months_from_input_files(cls, df: DataFrame, tier: str) -> set[str] | None:
         """Metadata-level candidate-month discovery (r6, VERDICT r5 #4):
         when EVERY input file of a file-backed source lies under a
         date-valued partition directory (``.../p_day=2023-01-05/``,
@@ -566,17 +578,13 @@ class AggregateStore:
             return None
         import re
 
-        keys = (
-            cls._DATE_PARTITION_KEYS if partition_keys is None
-            else {k.lower() for k in partition_keys}
-        )
         pat = re.compile(r"^(\d{4}-\d{2})(-\d{2})?$")
         months: set[str] = set()
         for f in files:
             month = None
             for seg in f.split("/")[:-1]:
                 key, _, val = seg.partition("=")
-                if _ and key.lower() in keys:
+                if _ and key.lower() in cls._DATE_PARTITION_KEYS:
                     g = pat.match(val)
                     if g:
                         month = g.group(1)
@@ -592,7 +600,6 @@ class AggregateStore:
         from_tier: str | None = None,
         job_id: str | None = None,
         discover_from_paths: bool = True,
-        partition_keys: set[str] | None = None,
     ) -> int:
         """(Re)build one tier from raw (``from_tier=None``) or by cascading
         the finer tier. Only months absent from the manifest are computed —
@@ -601,11 +608,9 @@ class AggregateStore:
         input's partition PATHS when possible (zero data rows read on a
         no-op resume; see :meth:`_months_from_input_files`) — pass
         ``discover_from_paths=False`` if the source is partitioned by a
-        date that is NOT the event time under one of the recognized keys,
-        or ``partition_keys={"my_event_date"}`` to trust a source whose
-        partition key really is the event date (only the store's own
-        ``p_month``/``p_day``/``p_date`` are trusted by default — ADVICE
-        r6: generic names like ``date``/``dt``/``ds`` usually hold the
+        date that is NOT the event time under one of the recognized keys
+        (only the store's own ``p_month``/``p_day``/``p_date`` are trusted —
+        ADVICE r6: generic names like ``date``/``dt``/``ds`` usually hold the
         ingest date, and a wrong trust silently misses months on resume).
 
         The aggregate has one consumer, the write: the months to commit are
@@ -628,7 +633,7 @@ class AggregateStore:
         done = self.completed_months(tier)
         if done:
             cand = (
-                self._months_from_input_files(source_df, tier, partition_keys)
+                self._months_from_input_files(source_df, tier)
                 if discover_from_paths else None
             )
             if cand is None:
@@ -681,12 +686,15 @@ class AggregateStore:
         return len(realized)
 
     def build_all(self, raw: DataFrame, tiers: list[str] | None = None) -> dict[str, int]:
-        """Full cascade with resume at every tier."""
+        """Full cascade with resume at every tier. The first tier rolls up
+        ``raw``; each coarser tier rolls up the finer tier's STORED rows
+        (:meth:`_read_stored` — a merge-on-read stack's partial rows
+        unmerged), so ``rollup_cascade`` is the one merge per tier."""
         tiers = tiers or TIER_CHAIN
         built: dict[str, int] = {}
         prev: str | None = None
         for t in tiers:
-            src = raw if prev is None else self.read_tier(prev)
+            src = raw if prev is None else self._read_stored(prev)
             built[t] = self.build_tier(t, src, from_tier=prev)
             prev = t
         return built
@@ -736,12 +744,9 @@ class AggregateStore:
 
         # phase 2: tier is untouched by this job (nothing references any
         # half-written files) — write the delta aggregate, delta ONLY
-        acc = ["n_seq", "sum_n_tok", "min_n_tok", "max_n_tok",
-               "tok_sum", "tok_min", "tok_max", "qc_ok_cnt"]
-        cols = ["source", "bucket", *acc, "avg_n_tok", "qc_frac", "p_month"]
         delta = rollup_from_raw(new_raw, tier).withColumn(
             "p_month", F.date_format("bucket", "yyyy-MM")
-        ).select(*cols)
+        )
         data_dir = self.data_path(tier, job_id)
         # deliberately NOT sorted like build/compact: a micro-batch delta is
         # a single row group per file, so a write sort buys no row-group
@@ -776,10 +781,11 @@ class AggregateStore:
         coarser tier for EXACTLY the months the finer tier added or changed
         since ``since_version`` (:meth:`snapshot_diff`).
         Month-partitions align across tiers (every tier's ``p_month`` is the
-        calendar month of its bucket). Under merge-on-read a changed finer
-        month may be a dir stack (base + deltas); :meth:`read_tier`
-        recombines the stack, so the source is the FULL month either way
-        and each affected coarser month is recomputed whole from it — no
+        calendar month of its bucket). The source is the changed months'
+        STORED rows (:meth:`_read_stored`): under merge-on-read a month may
+        be a dir stack (base + deltas), and its partial rows go straight
+        into ``rollup_cascade``, which is the one merge — no recombine
+        first. Each affected coarser month is recomputed whole — no
         cross-month state, no touching unaffected partitions.
 
         Same exactly-once shape as :meth:`incremental_update`: a replayed
@@ -794,7 +800,7 @@ class AggregateStore:
         if not months:
             return []
         cur = self.current_snapshot(coarser)  # CAS base for the commit
-        src = self.read_tier(finer, months=months)
+        src = self._read_stored(finer, months=months)
         agg = rollup_cascade(src, coarser).withColumn(
             "p_month", F.date_format("bucket", "yyyy-MM")
         )
@@ -876,12 +882,10 @@ class AggregateStore:
         self,
         tier: str,
         months: list[str] | None = None,
-        target_files: int = 1,
         job_id: str | None = None,
-        sort_by: tuple[str, ...] | None = ("source", "bucket"),
     ) -> list[str]:
-        """Rewrite month-partitions into ``target_files`` coalesced files
-        each (Iceberg's ``rewrite_data_files``). Under merge-on-read (r6)
+        """Rewrite each month-partition into one file sorted by source, then
+        bucket (Iceberg's ``rewrite_data_files``). Under merge-on-read (r6)
         this is ALSO where a month's delta stack folds back into one base
         dir: the read recombines base + deltas, the rewrite stores the
         recombined rows, and the snapshot entry collapses to a single dir —
@@ -905,14 +909,12 @@ class AggregateStore:
         simply call :meth:`compact` again (fresh job_id): the retry reads
         the post-merge snapshot and folds the new delta too.
 
-        ``sort_by`` (r6, Iceberg SORT ORDER parity): rewritten files are
-        sorted within each output task — by default ``(source, bucket)``,
-        so each source's rows land contiguously and parquet row-group /
-        page min-max stats prune a source-filtered read (the reference's
-        whole access pattern is by-site series). Merge deltas arrive in
-        shuffle order, so clustering decays between compactions and is
-        restored here — exactly where Iceberg applies its table sort
-        order. ``None`` skips the sort."""
+        The sort (r6, Iceberg SORT ORDER parity) lands each source's rows
+        contiguously, so parquet row-group / page min-max stats prune a
+        source-filtered read (the reference's whole access pattern is
+        by-site series). Merge deltas arrive in shuffle order, so clustering
+        decays between compactions and is restored here — exactly where
+        Iceberg applies its table sort order."""
         job_id = self._check_job_id(
             job_id or f"compact-{uuid.uuid4().hex[:8]}")
         # plain replay check, not _reconcile_replayed: compaction is
@@ -929,12 +931,10 @@ class AggregateStore:
         ).withColumn("p_month", F.date_format("bucket", "yyyy-MM"))
         data_dir = self.data_path(tier, job_id)
         # hash-partition so each month's rows land in one task (one output
-        # file per month-dir); target_files > 1 spreads by source too
-        keys = ["p_month"] if target_files == 1 else ["p_month", "source"]
-        out = df.repartition(max(1, target_files * len(todo)), *keys)
-        if sort_by:
-            out = out.sortWithinPartitions("p_month", *sort_by)
-        out.write.mode("overwrite").partitionBy("p_month").parquet(data_dir)
+        # file per month-dir)
+        df.repartition(len(todo), "p_month").sortWithinPartitions(
+            "p_month", "source", "bucket"
+        ).write.mode("overwrite").partitionBy("p_month").parquet(data_dir)
         self._commit_snapshot(
             tier, {m: f"{data_dir}/p_month={m}" for m in todo}, job_id,
             base=cur,

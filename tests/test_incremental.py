@@ -442,6 +442,42 @@ def test_streaming_cascade_crash_between_merge_and_refresh_heals(spark, tmp_path
     assert _rows(store.read_tier("1d")) == _rows(rollup_from_raw(full, "1d"))
 
 
+@pytest.mark.parametrize("cascade", ["refresh", "build_all"])
+def test_cascade_rolls_up_stored_rows_without_recombine(
+    spark, split_data, tmp_path, monkeypatch, cascade
+):
+    """Both cascades read the finer tier's stored rows, merge-on-read stack
+    included, and rollup_cascade is their only merge: deriving 1d and 1mo
+    from a stacked 1h month never calls recombine, and both coarser tiers
+    still equal a from-scratch rollup."""
+    import ingestr_spark.retention as retention
+
+    full, first, delta = split_data
+    store = AggregateStore(spark, str(tmp_path / cascade))
+    store.build_tier("1h", first)
+    store.incremental_update("1h", delta)
+    assert any(isinstance(e, list)
+               for e in store.current_snapshot("1h")["partitions"].values())
+    calls = []
+    real = retention.recombine
+
+    def spy(*a, **k):
+        calls.append(1)
+        return real(*a, **k)
+
+    monkeypatch.setattr(retention, "recombine", spy)
+    if cascade == "refresh":
+        store.cascade_refresh("1h", "1d", since_version=0)
+        store.cascade_refresh("1d", "1mo", since_version=0)
+    else:
+        store.build_all(full)
+    assert calls == []
+    for tier in ("1d", "1mo"):
+        assert _rows(store.read_tier(tier)) == _rows(
+            rollup_from_raw(full, tier)
+        ), tier
+
+
 def test_build_tier_path_discovery_zero_row_noop_resume(spark, tmp_path):
     """Metadata-level resume discovery (r6, VERDICT r5 #4): over a
     date-partitioned parquet source, candidate months come off the file
