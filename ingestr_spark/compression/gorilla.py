@@ -138,10 +138,6 @@ def _zigzag(v: int) -> int:
     return (v << 1) ^ (v >> 63)
 
 
-def _unzigzag(u: int) -> int:
-    return (u >> 1) ^ -(u & 1)
-
-
 # ---- timestamp codec: delta-of-delta ---------------------------------------
 
 def _check_ts_deltas(ts: np.ndarray) -> tuple[np.ndarray, np.ndarray]:

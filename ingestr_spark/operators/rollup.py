@@ -18,8 +18,11 @@ Scale design:
   coarser tier touches ~24-31× fewer rows than recomputing from raw, and
   integer accumulators make the result independent of partitioning/order
   (the rule's exact-match requirement; float means would not be).
-* ``avg_n_tok``/``qc_frac`` are stored as derived columns for convenience but
-  NEVER re-aggregated — cascade always recombines the integer parts.
+* ``avg_n_tok``/``qc_frac`` are algebraic: every rollup here returns them,
+  computed from the integer parts by :func:`_derived`, but they are NEVER
+  re-aggregated and the tier store does not write them — it keeps the
+  integer accumulators and derives both doubles on read by the same
+  expression.
 """
 
 from __future__ import annotations
@@ -72,9 +75,20 @@ def with_token_stats(df: DataFrame, tokens_col: str = "tokens") -> DataFrame:
 
 
 def _derived(df: DataFrame) -> DataFrame:
-    return df.withColumn(
-        "avg_n_tok", F.col("sum_n_tok").cast("double") / F.col("n_seq")
-    ).withColumn("qc_frac", F.col("qc_ok_cnt").cast("double") / F.col("n_seq"))
+    """Add ``avg_n_tok`` and ``qc_frac`` right after ``qc_ok_cnt``, in one
+    projection; columns after ``qc_ok_cnt`` (a store read's ``p_month``)
+    follow the two doubles. Written as SQL strings: ``selectExpr`` builds
+    the projection in one JVM call, where Column expressions cost a py4j
+    round trip per node — this runs on every tier-store read."""
+    names = df.columns
+    cols = [f"`{c}`" for c in names]
+    i = names.index("qc_ok_cnt") + 1
+    return df.selectExpr(
+        *cols[:i],
+        "CAST(sum_n_tok AS DOUBLE) / n_seq AS avg_n_tok",
+        "CAST(qc_ok_cnt AS DOUBLE) / n_seq AS qc_frac",
+        *cols[i:],
+    )
 
 
 def rollup_from_raw(
@@ -147,8 +161,11 @@ def recombine(tier_df: DataFrame, key: str = "source") -> DataFrame:
     tier grain, so no re-bucketing is needed — this is ``rollup_cascade``
     with the identity bucket, grain-agnostic by construction. Integer
     accumulators make the result independent of partitioning and delta
-    order; the derived doubles are recomputed by the same expression, so
-    a recombined read is bit-identical to an eager merge."""
+    order. ``avg_n_tok``/``qc_frac`` are computed from the merged integer
+    sums by the expression every rollup uses, and any doubles the input
+    carries are ignored, so a recombined read is bit-identical to an eager
+    merge. (The tier store's stacked-month read keeps only the merged
+    accumulators and derives the doubles once over all its months.)"""
     out = tier_df.groupBy(key, "bucket").agg(*_acc_merge_exprs())
     return _derived(out)
 

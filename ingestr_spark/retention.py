@@ -77,7 +77,13 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ingestr_spark.operators.rollup import recombine, rollup_cascade, rollup_from_raw
+from ingestr_spark.operators.rollup import (
+    ACC_COLS,
+    _derived,
+    recombine,
+    rollup_cascade,
+    rollup_from_raw,
+)
 
 TIER_CHAIN = ["1h", "1d", "1mo"]
 
@@ -90,20 +96,39 @@ MANIFEST_SCHEMA = (
     "job_id string, completed_at double"
 )
 
-#: the fixed tier-row schema every data dir is written with: the rollup
-#: accumulators over the raw table's ``n_tok int`` / ``tokens array<int>``
-#: columns (datagen's contract) and the two derived doubles, in written
-#: order. Declaring it at read time skips parquet schema inference, which
-#: cost one Spark job per tier and read shape on every fresh store object
-#: (the streaming sink opens one per drain). Stacked months are read from
-#: their leaf dirs, without a partition column; single-dir months are read
-#: under a basePath and get p_month from the directory name.
-TIER_SCHEMA = (
+#: the columns every data dir stores: the key and the integer rollup
+#: accumulators (:data:`STORED_SCHEMA`), nothing derived from them
+STORED_COLS = ["source", "bucket", *ACC_COLS]
+#: the fixed schema of the stored columns: the accumulators over the raw
+#: table's ``n_tok int`` / ``tokens array<int>`` columns (datagen's
+#: contract), in written order. Declaring it at read time skips parquet
+#: schema inference, which cost one Spark job per tier and read shape on
+#: every fresh store object (the streaming sink opens one per drain).
+#: Stacked months are read from their leaf dirs, without a partition
+#: column; single-dir months are read under a basePath and get p_month
+#: from the directory name. Dirs written before the store dropped the
+#: derived doubles still hold ``avg_n_tok``/``qc_frac``; the declared
+#: schema does not list them, so those dirs read like new ones.
+STORED_SCHEMA = (
     "source string, bucket timestamp, n_seq long, sum_n_tok long, "
     "min_n_tok int, max_n_tok int, tok_sum long, tok_min int, tok_max int, "
-    "qc_ok_cnt long, avg_n_tok double, qc_frac double"
+    "qc_ok_cnt long"
 )
-TIER_SCHEMA_BASEPATH = TIER_SCHEMA + ", p_month string"
+#: what :meth:`AggregateStore.read_tier` and ``read_changes`` return: the
+#: stored columns, ``avg_n_tok`` and ``qc_frac`` derived on read from the
+#: integer sums (:func:`~ingestr_spark.operators.rollup._derived`), and
+#: the month partition
+TIER_SCHEMA_BASEPATH = (
+    STORED_SCHEMA + ", avg_n_tok double, qc_frac double, p_month string"
+)
+
+
+def _as_stored(df: DataFrame) -> DataFrame:
+    """A tier frame in the store's layout: the stored columns and the
+    ``p_month`` partition of each bucket. Every data write goes through
+    here, and so does the stacked-month read before the doubles are
+    derived."""
+    return df.selectExpr(*STORED_COLS, "date_format(bucket, 'yyyy-MM') AS p_month")
 
 
 class AggregateStore:
@@ -414,16 +439,16 @@ class AggregateStore:
 
     # ---- reads ------------------------------------------------------------
     def _read_data_dirs(self, dirs: list[str], base_path: str | None) -> DataFrame:
-        """Read a set of month data dirs under the declared tier schema
-        (:data:`TIER_SCHEMA`). With ``base_path`` the p_month partition
+        """Read a set of month data dirs under the declared stored schema
+        (:data:`STORED_SCHEMA`). With ``base_path`` the p_month partition
         column is derived from the directory names (single-dir months);
         without it the given paths ARE the leaf month dirs and no partition
         column appears (stacked months)."""
         if base_path is None:
-            return self.spark.read.schema(TIER_SCHEMA).parquet(*sorted(dirs))
+            return self.spark.read.schema(STORED_SCHEMA).parquet(*sorted(dirs))
         return (
             self.spark.read.option("basePath", base_path)
-            .schema(TIER_SCHEMA_BASEPATH).parquet(*sorted(dirs))
+            .schema(STORED_SCHEMA + ", p_month string").parquet(*sorted(dirs))
         )
 
     def _month_dirs(
@@ -469,12 +494,16 @@ class AggregateStore:
         Merge-on-read (r6): a month whose entry is a dir STACK (base +
         per-batch deltas) is recombined algebraically here — the partial
         rows collapse to one row per (source, bucket), bit-identical to an
-        eager merge (integer accumulators; the derived doubles recompute by
-        the same expression). Single-dir months take the direct-scan fast
-        path, so a fully compacted store pays nothing; the recombine shuffle
-        is over TIER rows of the stacked months only (bounded by keys ×
-        calendar buckets, never raw-scale), and compaction cadence bounds
-        stack depth."""
+        eager merge (integer accumulators). Single-dir months take the
+        direct-scan fast path, so a fully compacted store pays nothing; the
+        recombine shuffle is over TIER rows of the stacked months only
+        (bounded by keys × calendar buckets, never raw-scale), and
+        compaction cadence bounds stack depth.
+
+        The store holds only the integer accumulators; ``avg_n_tok`` and
+        ``qc_frac`` are derived once, over the union of both read shapes,
+        by the expression every rollup uses (:data:`TIER_SCHEMA_BASEPATH`
+        is the result schema)."""
         singles: list[str] = []
         stacked: list[str] = []
         for dirs in self._month_dirs(tier, months, version):
@@ -493,14 +522,11 @@ class AggregateStore:
             # dir holds exactly one month's rows, so no cross-month bleed),
             # then the same-grain algebraic recombine
             raw = self._read_data_dirs(stacked, base_path=None)
-            rec = recombine(raw).withColumn(
-                "p_month", F.date_format("bucket", "yyyy-MM")
-            )
-            frames.append(rec)
+            frames.append(_as_stored(recombine(raw)))
         out = frames[0]
         for f in frames[1:]:
             out = out.unionByName(f)
-        return out
+        return _derived(out)
 
     def snapshot_diff(
         self, tier: str, from_version: int, to_version: int | None = None
@@ -624,12 +650,11 @@ class AggregateStore:
         """
         job_id = self._check_job_id(job_id or uuid.uuid4().hex[:12])
         cur = self.current_snapshot(tier)  # CAS base for the commit
-        agg = (
+        agg = _as_stored(
             rollup_from_raw(source_df, tier)
             if from_tier is None
             else rollup_cascade(source_df, tier)
         )
-        agg = agg.withColumn("p_month", F.date_format("bucket", "yyyy-MM"))
         done = self.completed_months(tier)
         if done:
             cand = (
@@ -744,9 +769,7 @@ class AggregateStore:
 
         # phase 2: tier is untouched by this job (nothing references any
         # half-written files) — write the delta aggregate, delta ONLY
-        delta = rollup_from_raw(new_raw, tier).withColumn(
-            "p_month", F.date_format("bucket", "yyyy-MM")
-        )
+        delta = _as_stored(rollup_from_raw(new_raw, tier))
         data_dir = self.data_path(tier, job_id)
         # deliberately NOT sorted like build/compact: a micro-batch delta is
         # a single row group per file, so a write sort buys no row-group
@@ -801,9 +824,7 @@ class AggregateStore:
             return []
         cur = self.current_snapshot(coarser)  # CAS base for the commit
         src = self._read_stored(finer, months=months)
-        agg = rollup_cascade(src, coarser).withColumn(
-            "p_month", F.date_format("bucket", "yyyy-MM")
-        )
+        agg = _as_stored(rollup_cascade(src, coarser))
         data_dir = self.data_path(coarser, job_id)
         # whole-month recompute → same write clustering as build_tier
         agg.repartition("p_month", "source").sortWithinPartitions(
@@ -926,9 +947,7 @@ class AggregateStore:
                       [m for m in months if m in cur["partitions"]])
         if not todo:
             return []
-        df = self.read_tier(
-            tier, months=todo, version=cur["version"]
-        ).withColumn("p_month", F.date_format("bucket", "yyyy-MM"))
+        df = _as_stored(self.read_tier(tier, months=todo, version=cur["version"]))
         data_dir = self.data_path(tier, job_id)
         # hash-partition so each month's rows land in one task (one output
         # file per month-dir)

@@ -96,6 +96,107 @@ def test_fresh_store_read_tier_starts_no_job(spark, tok, tmp_path):
         assert df.count() > 0, t
 
 
+def _first_months(tok, n):
+    """The rows of the first ``n`` calendar months: a small store is enough
+    where a test checks layout, not scale."""
+    m = F.date_format("ts", "yyyy-MM")
+    months = sorted(r[0] for r in tok.select(m).distinct().collect())[:n]
+    return tok.filter(m.isin(months))
+
+
+def test_store_writes_only_stored_columns(spark, tok, tmp_path):
+    """Every data file a store op writes holds the key and the integer
+    accumulators only — build, merge delta, cascade, fold and compact;
+    ``avg_n_tok``/``qc_frac`` are derived on read, never stored."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from ingestr_spark.operators.rollup import ACC_COLS
+
+    sub = _first_months(tok, 3)
+    root = str(tmp_path / "store_cols")
+    s = AggregateStore(spark, root)
+    s.build_all(sub.filter("id % 2 = 0"), ["1h", "1d", "1mo"])
+    v = s.current_snapshot("1h")["version"]
+    assert s.incremental_update("1h", sub.filter("id % 2 = 1"), job_id="m-1")
+    assert s.cascade_refresh("1h", "1d", since_version=v, job_id="cr-1")
+    assert s.fold_hot_stacks("1h", max_depth=1, job_id="fold-1")
+    assert s.compact("1mo", job_id="cp-1")
+    files = glob.glob(f"{root}/data/**/*.parquet", recursive=True)
+    for job in ("m-1", "cr-1", "fold-1", "cp-1"):
+        assert any(f"/{job}/" in f for f in files), job
+    for f in files:
+        assert pq.read_schema(f).names == ["source", "bucket", *ACC_COLS], f
+    assert "avg_n_tok" in s.read_tier("1h").columns
+
+
+def _add_legacy_doubles(spark, month_dir):
+    """Rewrite a month dir in the pre-accumulator-only layout: the two
+    derived doubles stored after ``qc_ok_cnt``. Their values are negated,
+    so a reader that used them instead of deriving would show."""
+    import shutil
+
+    df = spark.read.parquet(month_dir)
+    for name, num in (("avg_n_tok", "sum_n_tok"), ("qc_frac", "qc_ok_cnt")):
+        df = df.withColumn(name, -(F.col(num).cast("double") / F.col("n_seq")))
+    df.write.parquet(month_dir + ".legacy")
+    shutil.rmtree(month_dir)
+    os.rename(month_dir + ".legacy", month_dir)
+
+
+def test_legacy_dirs_read_like_new(spark, tok, tmp_path):
+    """A store whose dirs were written with the derived doubles (before the
+    store kept accumulators only) reads, cascades, compacts and verifies
+    exactly like an all-new store: one legacy month stays single-dir, the
+    other takes a new-format delta on top of its legacy base."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    from ingestr_spark.retention import TIER_SCHEMA_BASEPATH
+
+    with_m = _first_months(tok, 3).withColumn("_m", F.date_format("ts", "yyyy-MM"))
+    months = sorted(r["_m"] for r in with_m.select("_m").distinct().collect())
+    assert len(months) == 3
+    hot, cold = months[0], months[1]
+    is_delta = (F.col("_m") == hot) & (F.col("id") % 2 == 1)
+    base, delta = with_m.filter(~is_delta).drop("_m"), with_m.filter(is_delta).drop("_m")
+
+    stores = {}
+    for kind in ("new", "legacy"):
+        s = AggregateStore(spark, str(tmp_path / kind))
+        s.build_all(base, ["1d", "1mo"])
+        if kind == "legacy":
+            parts = s.current_snapshot("1d")["partitions"]
+            for m in (hot, cold):
+                _add_legacy_doubles(spark, s._resolve(parts[m]))
+        v = s.current_snapshot("1d")["version"]
+        assert s.incremental_update("1d", delta) == [hot]
+        stores[kind] = (s, v)
+    legacy, new = stores["legacy"][0], stores["new"][0]
+    parts = legacy.current_snapshot("1d")["partitions"]
+    assert isinstance(parts[cold], str) and len(parts[hot]) == 2
+
+    want = _parse_datatype_string(TIER_SCHEMA_BASEPATH)
+
+    def same(tier):
+        a, b = legacy.read_tier(tier), new.read_tier(tier)
+        assert a.schema == b.schema == want, tier
+        assert sorted(a.collect()) == sorted(b.collect()), tier
+
+    same("1d")
+    for s, v in stores.values():
+        assert s.cascade_refresh("1d", "1mo", since_version=v) == [hot]
+    same("1mo")
+    for s, _ in stores.values():
+        assert s.verify_cascade("1d", "1mo").filter("NOT ok").count() == 0
+        assert s.compact("1d")
+    same("1d")
+    assert sorted(legacy.verify_cascade("1d", "1mo").collect()) == \
+        sorted(new.verify_cascade("1d", "1mo").collect())
+    v_now = legacy.current_snapshot("1d")["version"]
+    assert legacy.read_changes("1d", v_now).schema == want
+
+
 def test_resume_after_partial_state(spark, tok, tmp_path):
     s = AggregateStore(spark, str(tmp_path / "store2"))
     s.build_tier("1h", tok)  # only first tier done, then "crash"
