@@ -27,8 +27,22 @@ from __future__ import annotations
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+
+def _q(name: str) -> str:
+    return f"`{name}`"
+
+
+def _window(key_cols: list[str], bucket_col: str, frame: str = "") -> str:
+    """A per-key window in bucket order, as SQL (``OVER (...)`` body)."""
+    keys = ", ".join(map(_q, key_cols))
+    return f"PARTITION BY {keys} ORDER BY {_q(bucket_col)} {frame}".rstrip()
+
+
+_RUNNING = "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
+_REMAINING = "ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING"
 
 
 def spine_join(
@@ -49,28 +63,25 @@ def spine_join(
     matched it, so all its rows came out as gaps). Precondition: every
     bucket lies on its key's ``step`` grid (calendar-truncated, or
     month-15 anchors with ``interval 1 month``); an off-grid bucket would
-    be kept instead of dropped by the join."""
+    be kept instead of dropped by the join.
+
+    Built from SQL strings: every PySpark Column node is a py4j round trip
+    on the query path."""
     key_cols = key_cols or ["source"]
     measures = [c for c in tier.columns if c not in (*key_cols, bucket_col)]
-    nxt = F.lead(bucket_col).over(Window.partitionBy(*key_cols).orderBy(bucket_col))
-    own = F.col("_pos") == 0
-    rows = tier.withColumn("_next", nxt).select(
-        *key_cols, *measures, "_next",
-        F.posexplode(F.expr(
-            f"sequence(`{bucket_col}`, coalesce(_next, `{bucket_col}`), {step})"
-        )).alias("_pos", "_b"),
-    ).filter(own | (F.col("_b") < F.col("_next")))
-    spined = rows.select(
-        *key_cols, F.col("_b").alias(bucket_col),
-        *[F.when(own, F.col(c)).alias(c) for c in measures],
+    keys, meas, b = list(map(_q, key_cols)), list(map(_q, measures)), _q(bucket_col)
+    gap = ("_pos <> 0 OR `n_seq` IS NULL" if "n_seq" in measures
+           else "CAST(NULL AS BOOLEAN)")
+    return tier.selectExpr(
+        "*", f"lead({b}) OVER ({_window(key_cols, bucket_col)}) AS _next",
+    ).selectExpr(
+        *keys, *meas, "_next",
+        f"posexplode(sequence({b}, coalesce(_next, {b}), {step})) AS (_pos, _b)",
+    ).filter("_pos = 0 OR _b < _next").selectExpr(
+        *keys, f"_b AS {b}",
+        *[f"CASE WHEN _pos = 0 THEN {m} END AS {m}" for m in meas],
+        f"{gap} AS gap",
     )
-    return spined.withColumn("gap", F.col("n_seq").isNull() if "n_seq" in tier.columns
-                             else F.lit(None).cast("boolean"))
-
-
-def _axis(bucket_col: str):
-    # numeric time axis in seconds — works for DateType and TimestampType
-    return F.col(bucket_col).cast("timestamp").cast("long")
 
 
 def locf(
@@ -82,15 +93,11 @@ def locf(
     """Last-observation-carried-forward per key (reference fill_gaps tail
     pass). ``last(ignorenulls)`` over an unbounded-preceding running frame —
     single sort per key partition, no UDF."""
-    key_cols = key_cols or ["source"]
-    w = (
-        Window.partitionBy(*key_cols)
-        .orderBy(bucket_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    for c in value_cols:
-        df = df.withColumn(c, F.last(c, ignorenulls=True).over(w))
-    return df
+    w = _window(key_cols or ["source"], bucket_col, _RUNNING)
+    return df.selectExpr(*[
+        f"last({_q(c)}, true) OVER ({w}) AS {_q(c)}" if c in value_cols else _q(c)
+        for c in df.columns
+    ])
 
 
 def zero_fill(df: DataFrame, value_cols: list[str]) -> DataFrame:
@@ -107,35 +114,31 @@ def interpolate_linear(
     bucket_col: str = "bucket",
 ) -> DataFrame:
     """Linear interpolation across nulls + head/tail nearest-value extension,
-    as closed-form window expressions (stats::approx semantics)."""
+    as closed-form window expressions (stats::approx semantics). The time
+    axis is the bucket in epoch seconds, for DateType and TimestampType."""
     key_cols = key_cols or ["source"]
-    w_prev = (
-        Window.partitionBy(*key_cols)
-        .orderBy(bucket_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_next = (
-        Window.partitionBy(*key_cols)
-        .orderBy(bucket_col)
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    )
-    t = _axis(bucket_col)
-    for c in value_cols:
-        v = F.col(c).cast("double")
-        t_of_v = F.when(v.isNotNull(), t)
-        pv = F.last(v, ignorenulls=True).over(w_prev)
-        pt = F.last(t_of_v, ignorenulls=True).over(w_prev)
-        nv = F.first(v, ignorenulls=True).over(w_next)
-        nt = F.first(t_of_v, ignorenulls=True).over(w_next)
-        interp = pv + (nv - pv) * (t - pt) / (nt - pt)
-        df = df.withColumn(
-            c,
-            F.when(v.isNotNull(), v)
-            .when(pv.isNotNull() & nv.isNotNull(), interp)
-            .when(pv.isNotNull(), pv)   # tail: carry last forward
-            .otherwise(nv),             # head: carry first backward
+    prev = _window(key_cols, bucket_col, _RUNNING)
+    nxt = _window(key_cols, bucket_col, _REMAINING)
+    t = f"CAST(CAST({_q(bucket_col)} AS TIMESTAMP) AS BIGINT)"
+
+    def fill(c: str) -> str:
+        v = f"CAST({_q(c)} AS DOUBLE)"
+        t_of_v = f"CASE WHEN {v} IS NOT NULL THEN {t} END"
+        pv = f"last({v}, true) OVER ({prev})"
+        pt = f"last({t_of_v}, true) OVER ({prev})"
+        nv = f"first({v}, true) OVER ({nxt})"
+        nt = f"first({t_of_v}, true) OVER ({nxt})"
+        return (
+            f"CASE WHEN {v} IS NOT NULL THEN {v} "
+            f"WHEN {pv} IS NOT NULL AND {nv} IS NOT NULL "
+            f"THEN {pv} + ({nv} - {pv}) * ({t} - {pt}) / ({nt} - {pt}) "
+            f"WHEN {pv} IS NOT NULL THEN {pv} "  # tail: carry last forward
+            f"ELSE {nv} END AS {_q(c)}"          # head: carry first backward
         )
-    return df
+
+    return df.selectExpr(*[
+        fill(c) if c in value_cols else _q(c) for c in df.columns
+    ])
 
 
 def interpolate_linear_pandas(

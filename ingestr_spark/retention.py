@@ -88,9 +88,9 @@ from ingestr_spark.operators.rollup import (
 TIER_CHAIN = ["1h", "1d", "1mo"]
 
 
-#: the fixed lineage-manifest schema (written by ``_log``; declaring it at
-#: read time skips parquet schema inference — one fewer footer-reading job
-#: per manifest read on the maintenance path)
+#: the fixed lineage-manifest schema (written by ``_log``; declaring it in
+#: :meth:`AggregateStore.read_manifest` skips parquet schema inference. The
+#: commit, replay and resume paths read the files with pyarrow instead)
 MANIFEST_SCHEMA = (
     "p_month string, n_rows long, sum_n_seq long, wall_ms long, "
     "job_id string, completed_at double"
@@ -129,6 +129,45 @@ def _as_stored(df: DataFrame) -> DataFrame:
     here, and so does the stacked-month read before the doubles are
     derived."""
     return df.selectExpr(*STORED_COLS, "date_format(bucket, 'yyyy-MM') AS p_month")
+
+
+def _data_files(d: str) -> list[str]:
+    """The files of a data or manifest dir that Spark reads: every name
+    not starting with ``.`` or ``_`` (skips ``_SUCCESS``, ``.crc`` files
+    and ``.tmp-*`` staging)."""
+    return [
+        f"{d}/{name}" for name in sorted(os.listdir(d))
+        if not name.startswith((".", "_"))
+    ]
+
+
+def _month_post_state(dirs: list[str]) -> tuple[int, int]:
+    """``(n_rows, sum_n_seq)`` of one month as :meth:`AggregateStore.read_tier`
+    returns it, from the parquet files of its dirs, on the driver. A
+    single dir holds one row per (source, bucket), so ``n_rows`` is its
+    row count; a merge-on-read stack recombines to one row per distinct
+    (source, bucket) over all its dirs. ``sum_n_seq`` sums every stored
+    row, as ``recombine`` does."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    cols = ["n_seq"] if len(dirs) == 1 else ["source", "bucket", "n_seq"]
+    # one schema across writers: timestamp encodings and nullability differ
+    types = {"source": pa.string(), "bucket": pa.timestamp("us"), "n_seq": pa.int64()}
+    schema = pa.schema([(c, types[c]) for c in cols])
+    tables = [
+        pq.read_table(f, columns=cols).cast(schema)
+        for d in dirs for f in _data_files(d)
+    ]
+    if not tables:
+        return 0, 0
+    t = pa.concat_tables(tables)
+    n_rows = (
+        t.num_rows if len(dirs) == 1
+        else t.group_by(["source", "bucket"]).aggregate([]).num_rows
+    )
+    return n_rows, pc.sum(t["n_seq"]).as_py() or 0
 
 
 class AggregateStore:
@@ -392,11 +431,22 @@ class AggregateStore:
         df = self.spark.read.schema(MANIFEST_SCHEMA).parquet(path)
         return df if df.columns else None
 
-    def completed_months(self, tier: str) -> set[str]:
-        m = self.read_manifest(tier)
-        if m is None:
+    def _manifest_values(self, tier: str, column: str) -> set:
+        """The distinct values of one manifest column, read on the driver
+        from the files :meth:`_log` writes — no Spark job on the commit,
+        replay and resume paths."""
+        import pyarrow.parquet as pq
+
+        path = self.manifest_path(tier)
+        if not os.path.isdir(path):
             return set()
-        return {r["p_month"] for r in m.select("p_month").distinct().collect()}
+        return {
+            v for f in _data_files(path)
+            for v in pq.read_table(f, columns=[column])[column].unique().to_pylist()
+        }
+
+    def completed_months(self, tier: str) -> set[str]:
+        return self._manifest_values(tier, "p_month")
 
     def _log(self, tier: str, rows: list[dict]) -> None:
         """Append lineage rows with the unique-file-name discipline the
@@ -640,11 +690,12 @@ class AggregateStore:
         ingest date, and a wrong trust silently misses months on resume).
 
         The aggregate has one consumer, the write: the months to commit are
-        listed from the job's own output, and the lineage rows are read
-        back from the written tier by :meth:`_log_job_from_data`, like every
-        other data-writing commit. The commit is CAS'd against the snapshot
-        read before the write, so a commit landing mid-build makes this
-        build fail with FileExistsError instead of overwriting it.
+        listed from the job's own output, and :meth:`_log_job_from_data`
+        takes the lineage rows from the written files on the driver, with
+        no Spark job, like every other data-writing commit. The commit is
+        CAS'd against the snapshot read before the write, so a commit
+        landing mid-build makes this build fail with FileExistsError
+        instead of overwriting it.
 
         Returns the number of month-partitions built this run.
         """
@@ -856,12 +907,7 @@ class AggregateStore:
         lag it by exactly one step."""
         if job_id not in self.committed_job_ids(tier):
             return False
-        m = self.read_manifest(tier)
-        logged = (
-            m is not None
-            and m.filter(F.col("job_id") == job_id).limit(1).count() > 0
-        )
-        if not logged:
+        if job_id not in self._manifest_values(tier, "job_id"):
             self._log_job_from_data(tier, job_id)
         return True
 
@@ -870,11 +916,16 @@ class AggregateStore:
         month the job's snapshot added or changed, read through that PINNED
         version (r6 — deterministic and replay-idempotent even under
         merge-on-read, where the job's own dir holds only a delta; the
-        lineage contract is that each job logs its months' post-state). If
-        the job's snapshot or its diff base was already expired by
-        :meth:`gc` before a crash-heal got here, the lineage row is
-        unrecoverable — skip rather than crash the replay no-op.
-        ``wall_ms`` is the job's write time (builds pass it; 0 otherwise)."""
+        lineage contract is that each job logs its months' post-state).
+        The stats are read on the driver from the parquet files of each
+        month's dirs in that version (:func:`_month_post_state`), the same
+        dirs ``read_tier(version=v)`` resolves; no Spark job starts — tier
+        rows are bounded by keys × calendar buckets, never raw scale. A
+        month with no rows logs no row. If the job's snapshot or its diff
+        base was already expired by :meth:`gc` before a crash-heal got
+        here, the lineage row is unrecoverable — skip rather than crash the
+        replay no-op. ``wall_ms`` is the job's write time (builds pass it;
+        0 otherwise)."""
         v = self.version_of_job(tier, job_id)
         if v is None:
             return
@@ -883,20 +934,20 @@ class AggregateStore:
             months = sorted(set(d["added"]) | set(d["changed"]))
             if not months:
                 return
-            df = self.read_tier(tier, months=months, version=v)
+            parts = self.snapshot(tier, v)["partitions"]
+            stats = {
+                m: _month_post_state(
+                    [self._resolve(x) for x in self._entry_dirs(parts[m])]
+                )
+                for m in months
+            }
         except FileNotFoundError:
             return
-        stats = (
-            df.groupBy("p_month")
-            .agg(F.count(F.lit(1)).alias("n_rows"), F.sum("n_seq").alias("sum_n_seq"))
-            .collect()
-        )
         now = time.time()
         self._log(tier, [
-            {"p_month": r["p_month"], "n_rows": r["n_rows"],
-             "sum_n_seq": r["sum_n_seq"], "wall_ms": wall_ms, "job_id": job_id,
-             "completed_at": now}
-            for r in stats
+            {"p_month": m, "n_rows": n_rows, "sum_n_seq": sum_n_seq,
+             "wall_ms": wall_ms, "job_id": job_id, "completed_at": now}
+            for m, (n_rows, sum_n_seq) in stats.items() if n_rows
         ])
 
     def compact(
@@ -1009,10 +1060,7 @@ class AggregateStore:
             n_files = n_bytes = n_rows = 0
             for d in dirs:
                 r = self._resolve(d)
-                for name in os.listdir(r) if os.path.isdir(r) else []:
-                    if not name.endswith(".parquet"):
-                        continue
-                    f = f"{r}/{name}"
+                for f in _data_files(r) if os.path.isdir(r) else []:
                     n_files += 1
                     n_bytes += os.path.getsize(f)
                     n_rows += pq.ParquetFile(f).metadata.num_rows

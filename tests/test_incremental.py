@@ -229,9 +229,10 @@ def test_build_tier_scan_budget_and_cheap_resume(spark, tmp_path):
     * fresh build = 1 pass (r7): with no completed months there is nothing
       to skip, so discovery is skipped outright and the single full
       aggregation feeds only the write — the committed months are listed
-      from the job's output and the manifest stats read the WRITTEN tier,
-      not the source (round 1 ran the full aggregation three times;
-      rounds 2-6 still paid a separate discovery pass);
+      from the job's output and the manifest stats are read on the driver
+      from the WRITTEN files (no Spark job), not the source (round 1 ran
+      the full aggregation three times; rounds 2-6 still paid a separate
+      discovery pass);
     * no-op resume = 1 slim discovery pass ONLY — resuming a completed tier
       must never pay the token-statistics aggregation (a persist-first
       version did, costing the full cascade per no-op resume)."""

@@ -4,6 +4,7 @@ retention drops."""
 from __future__ import annotations
 
 import os
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -59,6 +60,22 @@ def test_build_and_series_query_leave_no_persisted_rdd(spark, tok, tmp_path):
         assert s.read_manifest(t).filter("wall_ms <= 0").count() == 0, t
 
 
+def _jobs_started(spark, fn):
+    """Run ``fn`` under a fresh job group; return its result and the ids
+    of the Spark jobs it started."""
+    sc = spark.sparkContext
+    props = ("spark.jobGroup.id", "spark.job.description")
+    outer = [sc.getLocalProperty(p) for p in props]
+    group = f"no-job-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        for p, v in zip(props, outer):
+            sc.setLocalProperty(p, v)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_fresh_store_read_tier_starts_no_job(spark, tok, tmp_path):
     """A fresh store object's ``read_tier`` declares the tier schema instead
     of inferring it, so building the read plan starts no Spark job — for
@@ -77,16 +94,10 @@ def test_fresh_store_read_tier_starts_no_job(spark, tok, tmp_path):
     root = str(tmp_path / "store_schema")
     AggregateStore(spark, root).build_all(sub, ["1h", "1d", "1mo"])
     AggregateStore(spark, root).incremental_update("1h", sub.limit(20))
-    sc = spark.sparkContext
-    group = "test-fresh-store-read-tier"
-    sc.setJobGroup(group, group)
-    try:
-        fresh = AggregateStore(spark, root)
-        frames = {t: fresh.read_tier(t) for t in ["1h", "1d", "1mo"]}
-        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
+    fresh = AggregateStore(spark, root)
+    frames, jobs = _jobs_started(
+        spark, lambda: {t: fresh.read_tier(t) for t in ["1h", "1d", "1mo"]})
+    assert jobs == []
     assert any(
         len(e) > 1 for e in fresh.current_snapshot("1h")["partitions"].values()
     )  # the 1h read covered a stacked month
@@ -195,6 +206,92 @@ def test_legacy_dirs_read_like_new(spark, tok, tmp_path):
         sorted(new.verify_cascade("1d", "1mo").collect())
     v_now = legacy.current_snapshot("1d")["version"]
     assert legacy.read_changes("1d", v_now).schema == want
+
+
+def test_lineage_rows_equal_pinned_read_back(spark, tok, tmp_path):
+    """Every manifest row is its month's post-state at its job's version,
+    as ``read_tier`` returns it: builds, two merges whose deltas overlap on
+    keys in one month (so the stack's distinct (source, bucket) count is
+    below its physical row count), a stack whose base dir still holds the
+    legacy doubles, and the cascades over it."""
+    with_m = _first_months(tok, 3).withColumn("_m", F.date_format("ts", "yyyy-MM"))
+    hot = sorted(r["_m"] for r in with_m.select("_m").distinct().collect())[0]
+    s = AggregateStore(spark, str(tmp_path / "store_lineage"))
+    s.build_all(with_m.filter("id % 3 = 0").drop("_m"), ["1h", "1d", "1mo"])
+    _add_legacy_doubles(spark, s._resolve(s.current_snapshot("1h")["partitions"][hot]))
+    v0 = s.current_snapshot("1h")["version"]
+    d1 = with_m.filter((F.col("_m") == hot) & (F.col("id") % 3 == 1)).drop("_m")
+    assert s.incremental_update("1h", d1, job_id="m-1") == [hot]
+    # the second delta holds the first one's rows again: same keys
+    assert hot in s.incremental_update("1h", with_m.filter("id % 3 != 0").drop("_m"),
+                                       job_id="m-2")
+    v1d = s.current_snapshot("1d")["version"]
+    assert s.cascade_refresh("1h", "1d", since_version=v0, job_id="cr-1d")
+    assert s.cascade_refresh("1d", "1mo", since_version=v1d, job_id="cr-1mo")
+
+    v2 = s.version_of_job("1h", "m-2")
+    stack = s.partitions("1h", version=v2).filter(F.col("p_month") == hot).first()
+    assert stack["stack_depth"] == 3
+    n_hot = s.read_tier("1h", months=[hot], version=v2).count()
+    assert n_hot < stack["physical_rows"]  # the deltas overlap on keys
+
+    for tier in ("1h", "1d", "1mo"):
+        logged: dict[str, dict] = {}
+        for r in s.read_manifest(tier).collect():
+            logged.setdefault(r["job_id"], {})[r["p_month"]] = (
+                r["n_rows"], r["sum_n_seq"])
+        assert len(logged) == (3 if tier == "1h" else 2), tier
+        for job_id, rows in logged.items():
+            v = s.version_of_job(tier, job_id)
+            want = {
+                r["p_month"]: (r["n"], r["s"])
+                for r in s.read_tier(tier, months=sorted(rows), version=v)
+                .groupBy("p_month")
+                .agg(F.count(F.lit(1)).alias("n"), F.sum("n_seq").alias("s"))
+                .collect()
+            }
+            assert rows == want, (tier, job_id)
+    assert s.read_manifest("1h").filter(
+        (F.col("job_id") == "m-2") & (F.col("p_month") == hot)
+    ).first()["n_rows"] == n_hot
+
+
+def test_lineage_and_replay_heal_start_no_job(spark, tok, tmp_path, monkeypatch):
+    """The lineage rows of a merge onto stacked months are read on the
+    driver, and so is the replay gate's "already logged?" check: neither
+    the commit's ``_log_job_from_data`` nor a committed replay that heals a
+    cut-off manifest append starts a Spark job."""
+    sub = _first_months(tok, 2)
+    s = AggregateStore(spark, str(tmp_path / "store_nojob"))
+    s.build_all(sub.filter("id % 3 = 0"), ["1h"])
+    assert s.incremental_update("1h", sub.filter("id % 3 = 1"), job_id="m-1")
+
+    real_lineage = AggregateStore._log_job_from_data
+    lineage_jobs: dict[str, list] = {}
+
+    def spied(self, tier, job_id, wall_ms=0):
+        _, lineage_jobs[job_id] = _jobs_started(
+            spark, lambda: real_lineage(self, tier, job_id, wall_ms))
+
+    monkeypatch.setattr(AggregateStore, "_log_job_from_data", spied)
+    assert s.incremental_update("1h", sub.filter("id % 3 = 2"), job_id="m-2")
+    assert all(len(e) == 3 for e in s.current_snapshot("1h")["partitions"].values())
+    assert lineage_jobs == {"m-2": []}
+
+    def cut_off(self, tier, rows):
+        raise RuntimeError("simulated crash before the manifest append")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(AggregateStore, "_log", cut_off)
+        with pytest.raises(RuntimeError):
+            s.incremental_update("1h", sub.filter("id % 6 = 0"), job_id="m-3")
+    assert "m-3" not in s._manifest_values("1h", "job_id")
+    healed, jobs = _jobs_started(spark, lambda: s._reconcile_replayed("1h", "m-3"))
+    assert healed and jobs == []
+    assert "m-3" in s._manifest_values("1h", "job_id")
+    _, jobs = _jobs_started(spark, lambda: s._reconcile_replayed("1h", "m-3"))
+    assert jobs == []
+    assert s.read_manifest("1h").filter(F.col("job_id") == "m-3").count() == 2
 
 
 def test_resume_after_partial_state(spark, tok, tmp_path):
