@@ -25,22 +25,18 @@ bit-exact on float64 — asserted by tests incl. a hypothesis property.
 
 Scale design: the codecs run as grouped pandas UDFs over (key, chunk) —
 one Arrow batch per chunk, bounded chunk length keeps executor memory flat
-(SURVEY §7.3-5). Round 4 vectorized ENCODE: the value encoder walks window
-RESTARTS and emits whole '10' runs with numpy, the timestamp encoder is
-fully vectorized (no cross-point state), and both are assembled by a
-word-level bit packer. DECODE is one fused scalar loop per stream: one
-11-byte window read holds a complete field at any alignment, and a run of
-'0' controls (value repeats, dod=0 timestamps) is filled vectorized from
-one read. There is no speculative bulk decoder: on the benchmark's seed-1
-series (in process, 4-core VM) the loop alone decodes build_wide's 196k
-points in 261 ms against 333 ms with the uniform-'10', periodic-pattern
-and same-bucket-dod bulk paths and their gating, and the 40k-point
-maintain_query base store in 75 ms against 42 ms — and no timed
-operation of either workload decodes a blob. 6-9 Mpt/s encode; decode
-rates per shape in PERF.md — a native (Scala/C) kernel remains the
-further upgrade path, interface unchanged. Scalar reference encoders are
-retained and byte-equality with the vectorized encoders is
-hypothesis-tested.
+(SURVEY §7.3-5). Each stream has ONE encoder and ONE decoder, all scalar
+loops. ENCODE writes a run of '0' controls (value repeats, dod=0
+timestamps) as one zero fill and each other point as one fused
+control+payload write. DECODE reads one 11-byte window that holds a
+complete field at any alignment, and fills a run of '0' controls
+vectorized from one read. There is no vectorized encoder and no
+speculative bulk decoder, because no timed operation of either workload
+encodes or decodes a blob and the traced ``compress_tier`` spends its
+time at the pandas-UDF boundary (PERF.md "One encoder per stream"). The
+encoders' output is pinned by golden v3 bytes in tests/test_codec.py.
+Rates per shape in PERF.md — a native (Scala/C) kernel remains the
+further upgrade path, interface unchanged.
 """
 
 from __future__ import annotations
@@ -184,69 +180,12 @@ def _ts_step(deltas: np.ndarray) -> int:
 def encode_timestamps(ts: np.ndarray) -> bytes:
     """ts: int64 array (epoch seconds or any monotone int axis).
 
-    Fully vectorized (r4): unlike the value codec, the dod bucket choice has
-    NO cross-point state, so every field (bucket-fused control+payload, or
-    a split control + 64-bit payload for the '1111' bucket, plus zero-run
-    fillers) is computed with numpy and assembled by :func:`_bit_assemble`.
     Deltas and dods are written in units of the series' step
-    (:func:`_ts_step`), which the header carries. Byte-identical to
-    :func:`_encode_timestamps_scalar` (equivalence-tested). Raises
-    ValueError on inputs whose deltas or delta-of-deltas overflow int64
-    (see :func:`_check_ts_deltas`)."""
+    (:func:`_ts_step`), which the header carries. Raises ValueError on
+    inputs whose deltas or delta-of-deltas overflow int64 (see
+    :func:`_check_ts_deltas`)."""
     ts = np.asarray(ts, dtype=np.int64)
-    n = len(ts)
-    if n <= 2:
-        return _encode_timestamps_scalar(ts)  # scalar runs the check
-    deltas, dods = _check_ts_deltas(ts)  # == np.diff(ts), np.diff(deltas)
-    g = _ts_step(deltas)
-    dods = dods // g  # exact: every dod is a multiple of g
-    u64 = (1 << 64) - 1
-    field_vals: list[int] = [CODEC_VERSION, n, int(ts[0]) & u64, g,
-                             (int(deltas[0]) // g) & u64]
-    field_bits: list[int] = [8, 32, 64, 64, 64]
-    nz = np.flatnonzero(dods)
-    if len(nz):
-        d = dods[nz]
-        z = (np.left_shift(d, 1) ^ np.right_shift(d, 63)).view(np.uint64)
-        gaps = np.diff(nz, prepend=-1) - 1
-        b0 = (d >= -64) & (d <= 63)
-        b1 = ~b0 & (d >= -256) & (d <= 255)
-        b2 = ~b0 & ~b1 & (d >= -2048) & (d <= 2047)
-        big = ~(b0 | b1 | b2)
-        # small buckets fuse control+payload into one <=16-bit field; the
-        # '1111' bucket would need 68 bits, so it splits into a 4-bit
-        # control and a 64-bit payload (same bitstream)
-        zs = np.where(big, np.uint64(0), z)
-        fused = np.where(
-            b0, np.uint64(2 << 7) | zs,
-            np.where(b1, np.uint64(6 << 9) | zs,
-                     np.where(b2, np.uint64(14 << 12) | zs, np.uint64(0b1111))),
-        )
-        fused_bits = np.where(b0, 9, np.where(b1, 12, np.where(b2, 16, 4)))
-        pay = np.where(big, z, np.uint64(0))
-        pay_bits = np.where(big, 64, 0)
-        field_vals += np.column_stack(
-            (np.zeros(len(nz), dtype=np.uint64), fused, pay)
-        ).ravel().tolist()
-        field_bits += np.column_stack(
-            (gaps, fused_bits, pay_bits)
-        ).ravel().tolist()
-        tail = len(dods) - (int(nz[-1]) + 1)
-    else:
-        tail = len(dods)
-    if tail:
-        field_vals.append(0)
-        field_bits.append(tail)
-    return _bit_assemble(field_vals, field_bits)
-
-
-def _encode_timestamps_scalar(ts: np.ndarray) -> bytes:
-    """Scalar reference encoder (pre-round-4), kept as the bit-equality
-    oracle for the vectorized path (same step header, same step units).
-    Enforces the same bounded-delta precondition as the vectorized encoder
-    so the two stay exception-equivalent too."""
-    ts = np.asarray(ts, dtype=np.int64)
-    _check_ts_deltas(ts)
+    deltas, dods = _check_ts_deltas(ts)
     n = len(ts)
     w = _BitWriter()
     w.write(CODEC_VERSION, 8)
@@ -256,11 +195,10 @@ def _encode_timestamps_scalar(ts: np.ndarray) -> bytes:
     w.write(int(ts[0]) & ((1 << 64) - 1), 64)
     if n == 1:
         return w.getvalue()
-    deltas = np.diff(ts)
     g = _ts_step(deltas)
     w.write(g, 64)
     w.write((int(deltas[0]) // g) & ((1 << 64) - 1), 64)
-    dods = np.diff(deltas) // g
+    dods = dods // g  # exact: every dod is a multiple of g
     # Regular cadence dominates real series: every dod==0 is a single '0'
     # bit, so a run of z zeros is ONE write(0, z) call — identical
     # bitstream, O(nonzero dods) Python work instead of O(points).
@@ -407,186 +345,8 @@ def _decode_ts_loop(data, pos, blen, n, g, delta, prev, out, i):
 
 # ---- value codec: Gorilla XOR ----------------------------------------------
 
-def _bit_lengths_u64(x: np.ndarray) -> np.ndarray:
-    """Vectorized bit_length for a uint64 array (x > 0). Exponent read off
-    the float64 conversion, with an off-by-one fixup for values the
-    conversion rounds UP to the next power of two (e.g. 2^60 - 1 → 2.0^60):
-    candidate bl is correct or one too high, and (x >> (bl-1)) == 0 detects
-    the latter exactly."""
-    f = x.astype(np.float64)
-    bl = ((f.view(np.uint64) >> np.uint64(52)) & np.uint64(0x7FF)).astype(
-        np.int64
-    ) - 1022
-    bl = np.minimum(bl, 64)
-    over = (x >> np.minimum(bl - 1, 63).astype(np.uint64)) == 0
-    return bl - over
-
-
-def _bit_assemble(field_vals, field_bits) -> bytes:
-    """Pack (value, nbits) fields MSB-first into bytes — the vectorized
-    replacement for per-point _BitWriter.write calls (measured ~8M bytearray
-    appends per 1M points). WORD-level: each ≤64-bit field lands in at most
-    two 64-bit big-endian words, scattered with bitwise_or.at (fields are
-    disjoint bit ranges, so OR composes them exactly). Zero-VALUED fields
-    may carry any length — all their contributions are 0 under any clipped
-    shift — which is how inter-point zero runs ride the same path. Trailing
-    padding is zero bits, identical to _BitWriter.getvalue()."""
-    if len(field_vals) < 256:
-        # few fields (short/constant series): a python int accumulator beats
-        # the fixed numpy setup cost
-        acc, nb = 0, 0
-        for v, b in zip(
-            (field_vals.tolist() if isinstance(field_vals, np.ndarray)
-             else field_vals),
-            (field_bits.tolist() if isinstance(field_bits, np.ndarray)
-             else field_bits),
-        ):
-            v = int(v)
-            b = int(b)
-            acc = (acc << b) | (v & ((1 << b) - 1))
-            nb += b
-        pad = (-nb) % 8
-        return (acc << pad).to_bytes((nb + pad) // 8, "big")
-    fv = np.asarray(field_vals, dtype=np.uint64)
-    fb = np.asarray(field_bits, dtype=np.int64)
-    end = np.cumsum(fb)
-    total = int(end[-1])
-    start = end - fb
-    nwords = (total + 63) >> 6
-    # +2, not +1: a zero-width field whose start lands exactly on `total`
-    # with total % 64 == 0 has widx == nwords, so the lo-lane scatter
-    # targets nwords + 1 (confirmed crash on a 90-point timestamp series
-    # whose final small-bucket field is zero-width) — both spill slots are
-    # all-zero and dropped by the [:nwords] slice
-    words = np.zeros(nwords + 2, dtype=np.uint64)
-    widx = start >> 6
-    off = start & 63
-    spill = off + fb - 64  # bits of the field overflowing into word+1
-    ls = np.clip(-spill, 0, 63).astype(np.uint64)
-    rs = np.clip(spill, 0, 63).astype(np.uint64)
-    hi = np.where(spill <= 0, fv << ls, fv >> rs)
-    lo = np.where(
-        spill > 0, fv << np.clip(64 - spill, 0, 63).astype(np.uint64),
-        np.uint64(0),
-    )
-    np.bitwise_or.at(words, widx, hi)
-    np.bitwise_or.at(words, widx + 1, lo)
-    return words[:nwords].byteswap().tobytes()[: (total + 7) >> 3]
-
-
 def encode_values(vals: np.ndarray) -> bytes:
-    """vals: float64 array; bit-exact round trip (NaN included).
-
-    Fully run-vectorized encoder (round-4, VERDICT #7). The only sequential
-    structure in the Gorilla value format is the WINDOW chain: a '11'
-    control establishes (lead, mlen) and every subsequent point reuses it
-    with a 2-bit '10' control until the first point whose XOR does not fit.
-    On REAL series restarts are rare (measured 27 per 196k nonzero points
-    on tier-like data), so the encoder walks RESTARTS, not points: for each
-    '11' restart it finds the next violating point with a
-    geometrically-growing chunked numpy scan, emits the whole '10' run's
-    fields with vectorized column_stack arithmetic, and one word-level
-    :func:`_bit_assemble` pass packs everything.
-
-    CORRECTION (r5): a restart RESETS the window to the new xor's tight
-    (lead, mlen) — it does NOT monotonically widen, so the earlier "≤95
-    restarts on any input" bound was wrong: adversarial series alternating
-    xors between disjoint bit ranges restart at EVERY point, where the
-    per-restart numpy overhead is ~7x slower than the scalar encoder. The
-    walk therefore self-monitors restart density and bails to the
-    byte-identical :func:`_encode_values_scalar` (≈1 Mpt/s floor) when
-    runs are short. Byte-identical output either way
-    (hypothesis-equivalence-tested)."""
-    bits = np.asarray(vals, dtype=np.float64).view(np.uint64)
-    n = len(bits)
-    if n == 0:
-        return _encode_values_scalar(vals)
-    xors = np.bitwise_xor(bits[1:], bits[:-1]) if n > 1 else np.empty(0, np.uint64)
-    nz = np.flatnonzero(xors)
-    # header + first raw value share the field pipeline
-    seg_vals: list[np.ndarray] = [
-        np.array([CODEC_VERSION, n, int(bits[0])], dtype=np.uint64)
-    ]
-    seg_bits: list[np.ndarray] = [np.array([8, 32, 64], dtype=np.int64)]
-    J = len(nz)
-    if J:
-        x_nz = xors[nz]
-        leads = np.minimum(64 - _bit_lengths_u64(x_nz), 31)
-        low = np.bitwise_and(x_nz, np.negative(x_nz))
-        trails = _bit_lengths_u64(low) - 1
-        # zero-run length BEFORE each nonzero point (vectorized gap calc)
-        gaps = np.diff(nz, prepend=-1) - 1
-        j = 0
-        restarts = 0
-        j_mark = 0
-        while j < J:
-            # Adaptive bail (r5): the walk is O(restarts), and a restart
-            # RESETS the window to the new xor's tight (lead, mlen) — it
-            # does NOT monotonically widen — so adversarial series that
-            # alternate xors between disjoint bit ranges restart at EVERY
-            # point and the per-restart numpy overhead (~10 small array
-            # ops) makes the walk ~7x slower than the scalar encoder
-            # (measured 0.16 vs 1.08 Mpt/s on the corpus 'flap' shape).
-            # Every 32 restarts, if the window since the last check covered
-            # fewer than 16 points per restart, redo the WHOLE blob with the
-            # byte-identical scalar encoder — catching dense-from-the-start
-            # and sparse-then-dense shapes alike; the wasted partial walk is
-            # bounded by one 32-restart window.
-            restarts += 1
-            if restarts & 31 == 0:
-                if j - j_mark < 16 * 32:
-                    return _encode_values_scalar(vals)
-                j_mark = j
-            # restart at j: '11' control+meta (13 bits) + mlen payload
-            L = int(leads[j])
-            T = int(trails[j])
-            mlen = 64 - L - T
-            seg_vals.append(np.array(
-                [0, (((0b11 << 5) | L) << 6) | (mlen & 0x3F),
-                 int(x_nz[j]) >> T],
-                dtype=np.uint64,
-            ))
-            seg_bits.append(np.array([int(gaps[j]), 13, mlen], dtype=np.int64))
-            # find the next violation with geometrically growing chunks:
-            # O(run) when restarts are rare, O(small chunk) when dense
-            nxt = J
-            s = j + 1
-            chunk = 64
-            while s < J:
-                e = min(s + chunk, J)
-                v = (leads[s:e] < L) | (trails[s:e] < T)
-                hit = int(np.argmax(v))
-                if v[hit]:
-                    nxt = s + hit
-                    break
-                s = e
-                chunk = min(chunk * 8, 1 << 20)
-            if nxt > j + 1:
-                # bulk-emit the '10' run: per point [gap, '10' ctrl, payload]
-                sl = slice(j + 1, nxt)
-                m = nxt - (j + 1)
-                pay = np.right_shift(x_nz[sl], np.uint64(T))
-                seg_vals.append(np.column_stack((
-                    np.zeros(m, dtype=np.uint64),
-                    np.full(m, 2, dtype=np.uint64),
-                    pay,
-                )).ravel())
-                seg_bits.append(np.column_stack((
-                    gaps[sl],
-                    np.full(m, 2, dtype=np.int64),
-                    np.full(m, mlen, dtype=np.int64),
-                )).ravel())
-            j = nxt
-    tail_start = int(nz[-1]) + 1 if J else 0
-    if len(xors) > tail_start:
-        seg_vals.append(np.array([0], dtype=np.uint64))
-        seg_bits.append(np.array([len(xors) - tail_start], dtype=np.int64))
-    return _bit_assemble(np.concatenate(seg_vals), np.concatenate(seg_bits))
-
-
-def _encode_values_scalar(vals: np.ndarray) -> bytes:
-    """Scalar reference encoder (pre-round-4 implementation, kept as the
-    bit-equality oracle for the vectorized path)."""
+    """vals: float64 array; bit-exact round trip (NaN included)."""
     bits = np.asarray(vals, dtype=np.float64).view(np.uint64)
     n = len(bits)
     w = _BitWriter()

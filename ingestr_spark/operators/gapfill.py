@@ -35,14 +35,15 @@ def _q(name: str) -> str:
     return f"`{name}`"
 
 
-def _window(key_cols: list[str], bucket_col: str, frame: str = "") -> str:
+def _window(
+    key_cols: list[str], bucket_col: str, frame: str = "", order: str = "ASC"
+) -> str:
     """A per-key window in bucket order, as SQL (``OVER (...)`` body)."""
     keys = ", ".join(map(_q, key_cols))
-    return f"PARTITION BY {keys} ORDER BY {_q(bucket_col)} {frame}".rstrip()
+    return f"PARTITION BY {keys} ORDER BY {_q(bucket_col)} {order} {frame}".rstrip()
 
 
 _RUNNING = "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
-_REMAINING = "ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING"
 
 
 def spine_join(
@@ -115,10 +116,15 @@ def interpolate_linear(
 ) -> DataFrame:
     """Linear interpolation across nulls + head/tail nearest-value extension,
     as closed-form window expressions (stats::approx semantics). The time
-    axis is the bucket in epoch seconds, for DateType and TimestampType."""
+    axis is the bucket in epoch seconds, for DateType and TimestampType.
+
+    Both neighbours come from running frames, which Spark evaluates in one
+    pass: the next non-null value is the last one over the key in
+    DESCENDING bucket order. An unbounded-following frame would be
+    recomputed for every row, O(n^2) per key."""
     key_cols = key_cols or ["source"]
     prev = _window(key_cols, bucket_col, _RUNNING)
-    nxt = _window(key_cols, bucket_col, _REMAINING)
+    nxt = _window(key_cols, bucket_col, _RUNNING, order="DESC")
     t = f"CAST(CAST({_q(bucket_col)} AS TIMESTAMP) AS BIGINT)"
 
     def fill(c: str) -> str:
@@ -126,8 +132,8 @@ def interpolate_linear(
         t_of_v = f"CASE WHEN {v} IS NOT NULL THEN {t} END"
         pv = f"last({v}, true) OVER ({prev})"
         pt = f"last({t_of_v}, true) OVER ({prev})"
-        nv = f"first({v}, true) OVER ({nxt})"
-        nt = f"first({t_of_v}, true) OVER ({nxt})"
+        nv = f"last({v}, true) OVER ({nxt})"
+        nt = f"last({t_of_v}, true) OVER ({nxt})"
         return (
             f"CASE WHEN {v} IS NOT NULL THEN {v} "
             f"WHEN {pv} IS NOT NULL AND {nv} IS NOT NULL "

@@ -159,17 +159,14 @@ def test_truncated_blob_rejected():
 
 
 def test_vectorized_encoder_bitequal_property():
-    """Round-4 vectorized value encoder is byte-identical to the scalar
-    reference on arbitrary float64 series (incl. NaN/inf/−0.0)."""
+    """The value encoder round-trips arbitrary float64 series (incl.
+    NaN/inf/−0.0) bit-exactly; its bytes are pinned by
+    :func:`test_v3_golden_bytes`."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
     import numpy as np
 
-    from ingestr_spark.compression.gorilla import (
-        _encode_values_scalar,
-        decode_values,
-        encode_values,
-    )
+    from ingestr_spark.compression.gorilla import decode_values, encode_values
 
     @settings(max_examples=200, deadline=None)
     @given(st.lists(st.floats(allow_nan=True, allow_infinity=True,
@@ -177,7 +174,6 @@ def test_vectorized_encoder_bitequal_property():
     def check(xs):
         vals = np.array(xs, dtype=np.float64)
         blob = encode_values(vals)
-        assert blob == _encode_values_scalar(vals)
         assert np.array_equal(
             decode_values(blob).view(np.uint64), vals.view(np.uint64)
         )
@@ -186,14 +182,14 @@ def test_vectorized_encoder_bitequal_property():
 
 
 def test_vectorized_ts_encoder_bitequal_property():
-    """Round-4 vectorized timestamp encoder is byte-identical to the scalar
-    reference on arbitrary int64 series (every dod bucket + zero runs)."""
+    """The timestamp encoder round-trips arbitrary, unsorted int64 series
+    (every dod bucket + zero runs) exactly; its bytes are pinned by
+    :func:`test_v3_golden_bytes`."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
     import numpy as np
 
     from ingestr_spark.compression.gorilla import (
-        _encode_timestamps_scalar,
         decode_timestamps,
         encode_timestamps,
     )
@@ -203,7 +199,6 @@ def test_vectorized_ts_encoder_bitequal_property():
     def check(xs):
         ts = np.array(xs, dtype=np.int64)
         blob = encode_timestamps(ts)
-        assert blob == _encode_timestamps_scalar(ts)
         assert np.array_equal(decode_timestamps(blob), ts)
 
     check()
@@ -266,14 +261,11 @@ def test_ts_encode_delta_overflow_raises():
     """ADVICE r4: inputs whose consecutive deltas (or delta-of-deltas)
     overflow int64 must be rejected at ENCODE time with a clear message —
     previously they encoded a blob the decoder then reported as corrupt."""
-    from ingestr_spark.compression.gorilla import _encode_timestamps_scalar
-
     delta_ovf = np.array([-(2**62), 2**62], dtype=np.int64)  # delta = 2^63
     dod_ovf = np.array([0, 2**62, -2], dtype=np.int64)  # dod = -2^63 - 2
     for bad in (delta_ovf, dod_ovf):
-        for enc in (encode_timestamps, _encode_timestamps_scalar):
-            with pytest.raises(ValueError, match="exceeds int64"):
-                enc(bad)
+        with pytest.raises(ValueError, match="exceeds int64"):
+            encode_timestamps(bad)
     # large-but-valid deltas still round-trip: deltas of exactly 2^62, dod 0
     ok = np.array([-(2**62), 0, 2**62], dtype=np.int64)
     assert np.array_equal(decode_timestamps(encode_timestamps(ok)), ok)
@@ -381,8 +373,7 @@ def _adversarial_value_corpus() -> dict[str, np.ndarray]:
 
 def test_adversarial_decode_corpus_roundtrips():
     """Every corpus series must round-trip bit-exactly through the
-    vectorized encoder (byte-equal to the scalar one, tested elsewhere) and
-    the decoder — these shapes exercise restart flapping, short in-window
+    encoder and the decoder — these shapes exercise restart flapping, short in-window
     runs broken by repeats or restarts, and periodic heads that diverge."""
     for name, vs in _adversarial_value_corpus().items():
         out = decode_values(encode_values(vs))
@@ -390,8 +381,9 @@ def test_adversarial_decode_corpus_roundtrips():
 
 
 def test_ts_bulk_path_shapes_roundtrip():
-    """Long same-bucket dod runs, dense nonzero dods, jitter broken by
-    dod=0, bucket changes mid-run and near-int64 magnitudes — all must
+    """Long series of many shapes through the one encoder and decoder:
+    long same-bucket dod runs, dense nonzero dods, jitter broken by dod=0,
+    bucket changes mid-run and near-int64 magnitudes — all must
     round-trip exactly."""
     rng = np.random.default_rng(11)
     shapes = [
@@ -475,26 +467,27 @@ def test_ts_decode_corrupt_payload_overflow_raises():
     64-bit dod fields of +30: the running timestamp leaves int64 inside
     the dod loop, which must raise instead of wrapping. The blob has the
     v2 layout (no step field), which still decodes."""
-    from ingestr_spark.compression.gorilla import _bit_assemble
+    from ingestr_spark.compression.gorilla import _BitWriter
 
     n = 8
     zz = 30 << 1  # zigzag(+30)
-    fields = [2, n, 2**63 - 50, 1]
-    widths = [8, 32, 64, 64]
+    w = _BitWriter()
+    for v, b in ((2, 8), (n, 32), (2**63 - 50, 64), (1, 64)):
+        w.write(v, b)
     for _ in range(n - 2):
-        fields += [0b1111, zz]
-        widths += [4, 64]
-    blob = _bit_assemble(fields, widths)
+        w.write(0b1111, 4)
+        w.write(zz, 64)
+    blob = w.getvalue()
     with pytest.raises(ValueError, match="out of int64 range"):
         decode_timestamps(blob)
 
 
 def test_pattern_decoder_periodic_property():
-    """Hypothesis sweep of the period-pattern decoder's input space: random
-    periodic xor-control structures (period 1-8, window restarts / in-window
+    """Hypothesis sweep of periodic value series: random periodic
+    xor-control structures (period 1-8, window restarts / in-window
     changes / repeats mixed), random payloads, optional mid-stream
     divergence and aperiodic tails — every series must round-trip
-    bit-exactly whichever decode path engages."""
+    bit-exactly through the encoder and the decoder."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
     import numpy as np
@@ -553,6 +546,49 @@ _V2_VALS_HEX = "02000000063ff8000000000000613bffdc07400780fc00f850806b"
 _V2_VALS = np.array([1.5, 1.5, 2.25, -3.75, 0.0, 21.5])
 
 
+#: v3 bytes the encoders must reproduce. Timestamps: minutes whose
+#: dods in steps of 60 s are 0 0 0 5 0 -64 0 200 -256 2047 0 -2048 2048
+#: 5000 -5000 0 -1931 0, so every bucket '0' | '10' | '110' | '1110' |
+#: '1111' and both edges of the inner ones are hit
+_V3_TS = 1_704_067_200 + 60 * np.cumsum(
+    [0, 1, 1, 1, 1, 6, 6, -58, -58, 142, -114, 1933, 1933, -115, 1933,
+     6933, 1933, 1933, 2, 2]
+).astype(np.int64)
+_V3_TS_HEX = (
+    "03000000140000000065920080000000000000003c000000000000000110a5fdb21bff"
+    "dffceffff0000000000001000f0000000000002710f000000000000270f778a8"
+)
+#: ``_V2_TS`` in v3: step 3600, every dod in the '10' bucket
+_V3_OF_V2_TS_HEX = (
+    "030000000a00000000659200800000000000000e100000000000000001412072e96e446438"
+)
+#: values: repeats ('0'), in-window changes ('10'), new windows ('11'),
+#: NaN, −0.0 and ULP steps whose xor has more than 31 leading zeros (the
+#: 5-bit lead field caps at 31)
+_V3_VALS = np.array([
+    21.5, 21.5, 21.5, 21.75, 21.25, 21.375, np.nan, np.nan, -0.0, 0.0,
+    1.0, np.nextafter(1.0, 2.0), np.nextafter(np.nextafter(1.0, 2.0), 2.0),
+    1.0, 1e300, -1e-300, 3.0, 3.0,
+])
+_V3_VALS_HEX = (
+    "030000001240358000000000003883e00f903c48ff9ad80dfffd0008ffdfe100000000"
+    "c0000000380000000587d838fc8791000eb3e003fe4a288d2be21b16c1ad6e1fc2f8f3"
+    "5900"
+)
+
+
+def test_v3_golden_bytes():
+    """The encoders write exactly the pinned v3 bytes, and they decode back."""
+    for ts, hx in ((_V3_TS, _V3_TS_HEX), (_V2_TS, _V3_OF_V2_TS_HEX)):
+        assert encode_timestamps(ts).hex() == hx
+        assert np.array_equal(decode_timestamps(bytes.fromhex(hx)), ts)
+    assert encode_values(_V3_VALS).hex() == _V3_VALS_HEX
+    assert np.array_equal(
+        decode_values(bytes.fromhex(_V3_VALS_HEX)).view(np.uint64),
+        _V3_VALS.view(np.uint64),
+    )
+
+
 def _ts_step_field(blob: bytes) -> int:
     """The v3 header's step g: after version (1 B), count (4 B), t0 (8 B)."""
     return int.from_bytes(blob[13:21], "big")
@@ -604,14 +640,11 @@ _STEP_SHAPES = {
 
 @pytest.mark.parametrize("name", list(_STEP_SHAPES))
 def test_ts_step_shapes_roundtrip_and_bitequal(name):
-    """Step detection: every shape round-trips bit-exact, both encoders
-    write the same bytes, and the header carries the expected step."""
-    from ingestr_spark.compression.gorilla import _encode_timestamps_scalar
-
+    """Step detection: every shape round-trips bit-exact and the header
+    carries the expected step."""
     xs, step = _STEP_SHAPES[name]
     ts = np.asarray(xs, dtype=np.int64)
     blob = encode_timestamps(ts)
-    assert blob == _encode_timestamps_scalar(ts)
     assert blob[0] == 3
     assert np.array_equal(decode_timestamps(blob), ts)
     if step is None:
@@ -627,30 +660,23 @@ def test_ts_step_shapes_roundtrip_and_bitequal(name):
     st.lists(st.integers(-50, 50), max_size=120),
 )
 def test_ts_step_units_bitequal_property(step, t0, ks):
-    """Series on a step grid (any sign, repeats, gaps): the vectorized and
-    scalar encoders agree byte for byte and the round trip is exact."""
-    from ingestr_spark.compression.gorilla import _encode_timestamps_scalar
-
+    """Series on a step grid (any sign, repeats, gaps): the round trip is
+    exact."""
     ts = t0 + step * np.cumsum([0, *ks]).astype(np.int64)
     blob = encode_timestamps(ts)
-    assert blob == _encode_timestamps_scalar(ts)
     assert np.array_equal(decode_timestamps(blob), ts)
 
 
 def _v3_ts_blob(n, t0, g, delta_steps, dod_fields=(), tail_zeros=0):
     """Hand-built v3 timestamp blob: header, then (value, width) fields."""
-    from ingestr_spark.compression.gorilla import _bit_assemble
+    from ingestr_spark.compression.gorilla import _BitWriter
 
-    u64 = (1 << 64) - 1
-    vals = [3, n, t0 & u64, g, delta_steps & u64]
-    widths = [8, 32, 64, 64, 64]
-    for v, w in dod_fields:
-        vals.append(v)
-        widths.append(w)
-    if tail_zeros:
-        vals.append(0)
-        widths.append(tail_zeros)
-    return _bit_assemble(vals, widths)
+    w = _BitWriter()
+    for v, b in ((3, 8), (n, 32), (t0, 64), (g, 64), (delta_steps, 64),
+                 *dod_fields):
+        w.write(v, b)  # masks to the width: negatives as two's complement
+    w.write_zeros(tail_zeros)
+    return w.getvalue()
 
 
 def test_ts_decode_v3_corrupt_step_raises():

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -47,12 +48,34 @@ def test_linear_interior_and_headtail(series):
     assert _vals(out, "b") == [7.0, 7.0, 7.0]  # head backfill + tail LOCF
 
 
-def test_pandas_kernel_matches_sql_windows(series):
-    sql_out = interpolate_linear(series, ["v"])
-    pd_out = interpolate_linear_pandas(series, ["v"])
-    a = sorted(tuple(r) for r in sql_out.collect())
-    b = sorted(tuple(r) for r in pd_out.collect())
-    assert a == b
+def _long_hourly_key(spark, n=3_000):
+    """One key of ``n`` hourly rows with null runs at the head, in the
+    middle and at the tail. Known values lie on lines of small integer
+    slope per second, so both kernels' blends are exact."""
+    rng = np.random.default_rng(7)
+    t0 = dt.datetime(2021, 1, 1)
+    known = rng.random(n) < 0.3
+    known[:40] = known[-40:] = False
+    known[1_000:1_400] = False
+    v, slope, rows = 0.0, 1, []
+    for i in range(n):
+        rows.append(("k", t0 + dt.timedelta(hours=i), v if known[i] else None))
+        slope = int(rng.integers(-3, 4)) if known[i] else slope
+        v += 3600.0 * slope
+    return spark.createDataFrame(rows, "source string, bucket timestamp, v double")
+
+
+def test_pandas_kernel_matches_sql_windows(spark, series):
+    for df in (series, _long_hourly_key(spark)):
+        sql_out = interpolate_linear(df, ["v"])
+        pd_out = interpolate_linear_pandas(df, ["v"])
+        a = sorted(tuple(r) for r in sql_out.collect())
+        b = sorted(tuple(r) for r in pd_out.collect())
+        assert a == b
+        # running frames only: an unbounded-following frame is recomputed
+        # per row, O(n^2) per key
+        plan = sql_out._jdf.queryExecution().optimizedPlan().toString()
+        assert "unboundedfollowing" not in plan.lower()
 
 
 def test_locf(series):
