@@ -4,6 +4,10 @@ Defaults chosen for a large multi-executor cluster but harmless on local[N]:
 AQE on (runtime re-planning, skew-join splitting, partition coalescing),
 Arrow on (every pandas-UDF boundary is Arrow-batched), UTC session timezone
 (calendar bucketing must not depend on cluster-local time).
+
+Sessions start cold: no warm-up job runs at build time, so the first real
+operation of a session pays JVM class loading, codegen and the Python
+worker start. Benchmarks warm their own workloads before timing them.
 """
 
 from __future__ import annotations
@@ -38,91 +42,8 @@ ENGINE_CONF: dict[str, str] = {
 }
 
 
-#: application ids already prewarmed (getOrCreate can hand the same session
-#: to many get_spark calls — warm once)
-_PREWARMED: set[str] = set()
-
-
 def _prewarm(spark: SparkSession) -> None:
-    """Absorb one-time runtime costs at session BUILD time, not inside the
-    first real query (guide §1: measure the engine, not JVM classloading).
-
-    Two tiny jobs over ``spark.range`` data (no external input, nothing
-    cached, no query result precomputed):
-
-    * a mini-pipeline exercising the operator classes the engine uses
-      everywhere — hash aggregate + exchange, window, higher-order array
-      functions, broadcast join, union, sort — which forces the
-      shuffle/codegen/Janino/Parquet class graph to load (measured ~5-7 s
-      off the first query on a cold 32-thread local JVM);
-    * one job per Python-eval plan shape (MapInPandas, FlatMapGroupsInPandas,
-      FlatMapCoGroupsInPandas) sized to ``2 x defaultParallelism`` input
-      partitions, which forks the Python worker pool once and pays the
-      per-worker numpy/pandas/Arrow imports up front (workers are reused —
-      ``spark.python.worker.reuse`` default; measured ~5 s off the first
-      Python-stage query).
-
-    Costs ~8-10 s once per session; disable with SPARK_GRAFT_PREWARM=0
-    (the test suite does, its many small sessions don't amortize it).
-    """
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    n = spark.sparkContext.defaultParallelism
-    df = spark.range(0, 4096, 1, 8).select(
-        (F.col("id") % 7).alias("k"),
-        F.col("id").cast("double").alias("v"),
-        F.expr("transform(sequence(1, 8), i -> CAST(id % 97 AS INT))").alias("arr"),
-    )
-    w = (
-        Window.partitionBy("k").orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    agg = df.groupBy("k").agg(F.sum("v").alias("s"), F.min("v").alias("mn"))
-    out = (
-        df.withColumn("r", F.last("v", ignorenulls=True).over(w))
-        .withColumn(
-            "ts",
-            F.aggregate("arr", F.lit(0).cast("long"), lambda a, x: a + x.cast("long")),
-        )
-        .join(F.broadcast(agg), "k")
-    )
-    out.unionByName(out).write.format("noop").mode("overwrite").save()
-
-    # parquet reader/writer class graph (vectorized reader, codecs, file
-    # committer): one tiny self-generated round-trip under a throwaway tmp
-    # dir — no external data is read, nothing persists past the prewarm
-    import shutil
-    import tempfile
-
-    pq_dir = tempfile.mkdtemp(prefix="ingestr_prewarm_pq_")
-    try:
-        spark.range(0, 512, 1, 2).selectExpr(
-            "id", "CAST(id AS DOUBLE) AS v", "CAST(id % 5 AS STRING) AS k"
-        ).write.mode("overwrite").parquet(pq_dir)
-        spark.read.parquet(pq_dir).filter("id % 3 = 0").groupBy("k").agg(
-            F.sum("v").alias("s")
-        ).write.format("noop").mode("overwrite").save()
-    finally:
-        shutil.rmtree(pq_dir, ignore_errors=True)
-
-    def _mp(it):
-        import numpy as np  # noqa: F401  (pay the worker-side import here)
-
-        yield from it
-
-    spark.range(2 * n, numPartitions=2 * n).mapInPandas(_mp, "id long").write.format(
-        "noop"
-    ).mode("overwrite").save()
-    g = spark.range(2 * n, numPartitions=4).select(
-        (F.col("id") % (2 * n)).alias("k"), F.col("id").alias("v")
-    )
-    g.groupBy("k").applyInPandas(lambda pdf: pdf, "k long, v long").write.format(
-        "noop"
-    ).mode("overwrite").save()
-    g.groupBy("k").cogroup(g.groupBy("k")).applyInPandas(
-        lambda l, r: l, "k long, v long"
-    ).write.format("noop").mode("overwrite").save()
+    """No-op: exists only for perfbench's traced-run wrap, deleted with it."""
 
 
 def get_spark(
@@ -161,19 +82,7 @@ def get_spark(
         conf.update(extra_conf)
     for k, v in conf.items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    if os.environ.get("SPARK_GRAFT_PREWARM", "1") != "0":
-        app_id = spark.sparkContext.applicationId
-        if app_id not in _PREWARMED:
-            _PREWARMED.add(app_id)
-            try:
-                _prewarm(spark)
-            except Exception:
-                # warmup is an optimization, never a dependency: a session
-                # that cannot run the warmup jobs (exotic deployment, tmp
-                # dir restrictions) must still come up and run real queries
-                pass
-    return spark
+    return builder.getOrCreate()
 
 
 def apply_engine_conf(spark: SparkSession) -> SparkSession:

@@ -7,10 +7,6 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# the session prewarm (session._prewarm) amortizes over a long bench/pipeline
-# session; the suite builds many short-lived sessions, so skip it here
-os.environ.setdefault("SPARK_GRAFT_PREWARM", "0")
-
 from ingestr_spark.session import get_spark
 
 

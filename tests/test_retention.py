@@ -107,6 +107,41 @@ def test_fresh_store_read_tier_starts_no_job(spark, tok, tmp_path):
         assert df.count() > 0, t
 
 
+def test_get_spark_starts_no_job(spark, monkeypatch):
+    """Building a session runs no warm-up: ``get_spark`` on the running
+    session starts no Spark job and makes no temp dir, whatever warm-up
+    switch an old environment still exports."""
+    import tempfile
+
+    from ingestr_spark.session import get_spark
+
+    for k in [k for k in os.environ if "PREWARM" in k]:
+        monkeypatch.delenv(k)
+    made = []
+    mkdtemp = tempfile.mkdtemp
+
+    def recording_mkdtemp(*a, **k):
+        made.append(mkdtemp(*a, **k))
+        return made[-1]
+
+    monkeypatch.setattr(tempfile, "mkdtemp", recording_mkdtemp)
+
+    def warm_dirs():
+        return {d for d in os.listdir(tempfile.gettempdir())
+                if d.startswith("ingestr_prewarm_pq_")}
+
+    before = warm_dirs()
+    # the conftest fixture's arguments: the call must not re-tune the
+    # running session's conf for the tests after this one
+    got, jobs = _jobs_started(spark, lambda: get_spark(
+        "ingestr-tests", master="local[4]", shuffle_partitions=8,
+        extra_conf={"spark.ui.enabled": "false"}))
+    assert got is spark
+    assert jobs == []
+    assert made == []
+    assert warm_dirs() == before
+
+
 def _first_months(tok, n):
     """The rows of the first ``n`` calendar months: a small store is enough
     where a test checks layout, not scale."""
