@@ -54,11 +54,37 @@ def bucket_expr(tier: str, col: str):
         )
     return F.date_trunc(TIER_GRAIN[tier], F.col(col))
 
-#: integer/exact accumulator columns stored per tier row
-ACC_COLS = [
-    "n_seq", "sum_n_tok", "min_n_tok", "max_n_tok",
-    "tok_sum", "tok_min", "tok_max", "qc_ok_cnt",
-]
+#: The one definition of a tier row: each integer accumulator, in stored
+#: order, -> (its aggregate over raw rows after :func:`with_token_stats`,
+#: the function that merges partial rows of it, its stored type over the
+#: raw table's ``n_tok int`` / ``tokens array<int>``). The rollups, the
+#: salted rollup, the windowed stream and the store schema all read it.
+ACCUMULATORS = {
+    "n_seq": ("count(1)", "sum", "long"),
+    "sum_n_tok": ("sum(n_tok)", "sum", "long"),
+    "min_n_tok": ("min(n_tok)", "min", "int"),
+    "max_n_tok": ("max(n_tok)", "max", "int"),
+    "tok_sum": ("sum(tok_sum_row)", "sum", "long"),
+    "tok_min": ("min(tok_min_row)", "min", "int"),
+    "tok_max": ("max(tok_max_row)", "max", "int"),
+    # quality codes {0,1} count as good (the reference's `qc <= threshold`,
+    # R/get_obs_bysite_fluxnet.R:787-832)
+    "qc_ok_cnt": (
+        "sum(CASE WHEN qc IN (0, 1) THEN 1 ELSE 0 END)", "sum", "long"),
+}
+#: the accumulator column names, in stored order
+ACC_COLS = list(ACCUMULATORS)
+
+
+def _raw_aggs() -> list:
+    """The accumulators as aggregates over raw rows."""
+    return [F.expr(f"{raw} AS {c}") for c, (raw, _, _) in ACCUMULATORS.items()]
+
+
+def _merge_aggs() -> list:
+    """The accumulators as merges of partial tier rows (sum/min/max
+    compose): the coarser-tier cascade and the same-grain recombine."""
+    return [F.expr(f"{m}({c}) AS {c}") for c, (_, m, _) in ACCUMULATORS.items()]
 
 
 def with_token_stats(df: DataFrame, tokens_col: str = "tokens") -> DataFrame:
@@ -97,42 +123,12 @@ def rollup_from_raw(
     key: str = "source",
     ts_col: str = "ts",
 ) -> DataFrame:
-    """Aggregate the raw sequence table into one retention tier.
-
-    QC fraction follows the reference's rule (quality codes {0,1} count as
-    good, R/get_obs_bysite_fluxnet.R:787-832 via `qc <= threshold`).
-    """
-    stats = with_token_stats(df)
-    out = stats.groupBy(
+    """Aggregate the raw sequence table into one retention tier."""
+    out = with_token_stats(df).groupBy(
         F.col(key).alias("source"),
         bucket_expr(tier, ts_col).alias("bucket"),
-    ).agg(
-        F.count(F.lit(1)).alias("n_seq"),
-        F.sum("n_tok").alias("sum_n_tok"),
-        F.min("n_tok").alias("min_n_tok"),
-        F.max("n_tok").alias("max_n_tok"),
-        F.sum("tok_sum_row").alias("tok_sum"),
-        F.min("tok_min_row").alias("tok_min"),
-        F.max("tok_max_row").alias("tok_max"),
-        F.sum(F.when(F.col("qc").isin(0, 1), 1).otherwise(0)).alias("qc_ok_cnt"),
-    )
+    ).agg(*_raw_aggs())
     return _derived(out)
-
-
-def _acc_merge_exprs():
-    """The one definition of how tier accumulators recombine (sum/min/max
-    compose; shared by the coarser-tier cascade and the same-grain
-    merge-on-read recombine so they can never drift apart)."""
-    return [
-        F.sum("n_seq").alias("n_seq"),
-        F.sum("sum_n_tok").alias("sum_n_tok"),
-        F.min("min_n_tok").alias("min_n_tok"),
-        F.max("max_n_tok").alias("max_n_tok"),
-        F.sum("tok_sum").alias("tok_sum"),
-        F.min("tok_min").alias("tok_min"),
-        F.max("tok_max").alias("tok_max"),
-        F.sum("qc_ok_cnt").alias("qc_ok_cnt"),
-    ]
 
 
 def rollup_cascade(tier_df: DataFrame, to_tier: str, key: str = "source") -> DataFrame:
@@ -150,7 +146,7 @@ def rollup_cascade(tier_df: DataFrame, to_tier: str, key: str = "source") -> Dat
     out = tier_df.groupBy(
         F.col(key).alias("source"),
         bucket_expr(to_tier, "bucket").alias("bucket"),
-    ).agg(*_acc_merge_exprs())
+    ).agg(*_merge_aggs())
     return _derived(out)
 
 
@@ -166,7 +162,7 @@ def recombine(tier_df: DataFrame, key: str = "source") -> DataFrame:
     carries are ignored, so a recombined read is bit-identical to an eager
     merge. (The tier store's stacked-month read keeps only the merged
     accumulators and derives the doubles once over all its months.)"""
-    out = tier_df.groupBy(key, "bucket").agg(*_acc_merge_exprs())
+    out = tier_df.groupBy(key, "bucket").agg(*_merge_aggs())
     return _derived(out)
 
 

@@ -16,7 +16,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ingestr_spark.operators.rollup import _derived, bucket_expr, with_token_stats
+from ingestr_spark.operators.rollup import (
+    _raw_aggs,
+    bucket_expr,
+    recombine,
+    with_token_stats,
+)
 
 
 def salted_rollup_from_raw(
@@ -28,31 +33,12 @@ def salted_rollup_from_raw(
     salt_col: str = "id",
 ) -> DataFrame:
     """Two-phase rollup: partial agg on (source, bucket, salt), final agg on
-    (source, bucket). Salt derives from a deterministic row attribute
-    (id % n) — reproducible, unlike a random salt."""
-    stats = with_token_stats(df)
-    partial = stats.groupBy(
+    (source, bucket) by :func:`~ingestr_spark.operators.rollup.recombine`.
+    Salt derives from a deterministic row attribute (id % n) — reproducible,
+    unlike a random salt."""
+    partial = with_token_stats(df).groupBy(
         F.col(key).alias("source"),
         bucket_expr(tier, ts_col).alias("bucket"),
         (F.col(salt_col) % n_salts).alias("_salt"),
-    ).agg(
-        F.count(F.lit(1)).alias("n_seq"),
-        F.sum("n_tok").alias("sum_n_tok"),
-        F.min("n_tok").alias("min_n_tok"),
-        F.max("n_tok").alias("max_n_tok"),
-        F.sum("tok_sum_row").alias("tok_sum"),
-        F.min("tok_min_row").alias("tok_min"),
-        F.max("tok_max_row").alias("tok_max"),
-        F.sum(F.when(F.col("qc").isin(0, 1), 1).otherwise(0)).alias("qc_ok_cnt"),
-    )
-    final = partial.groupBy("source", "bucket").agg(
-        F.sum("n_seq").alias("n_seq"),
-        F.sum("sum_n_tok").alias("sum_n_tok"),
-        F.min("min_n_tok").alias("min_n_tok"),
-        F.max("max_n_tok").alias("max_n_tok"),
-        F.sum("tok_sum").alias("tok_sum"),
-        F.min("tok_min").alias("tok_min"),
-        F.max("tok_max").alias("tok_max"),
-        F.sum("qc_ok_cnt").alias("qc_ok_cnt"),
-    )
-    return _derived(final)
+    ).agg(*_raw_aggs())
+    return recombine(partial)

@@ -61,9 +61,17 @@ Layout:
 
 Manifest row = one completed partition:
     (tier, p_month, n_rows, sum_n_seq, wall_ms, job_id, completed_at)
-``sum_n_seq`` doubles as the verification checksum: a coarser tier's
-partition is "verified" when its sum_n_seq equals the finer tier's over the
-same month — only then may the finer partition be dropped by retention.
+The manifest is lineage only. Retention verifies from the tiers' own rows:
+:meth:`AggregateStore.verify_cascade` recomputes each month's sum of
+``n_seq`` in the finer and the coarser tier, and
+:meth:`AggregateStore.apply_retention` drops a finer month only when the
+two agree.
+
+Only the tiers of :data:`TIER_CHAIN` are stored: their buckets never leave
+the row's calendar month, which month-partitioned writes, path month
+discovery and month-wise cascades all rely on. A week bucket can start in
+the previous month and a year bucket lands in January, so ``1w``/``1y``
+(and ``1w_ref``) are rollups for callers, not store tiers.
 """
 
 from __future__ import annotations
@@ -79,6 +87,7 @@ from pyspark.sql import functions as F
 
 from ingestr_spark.operators.rollup import (
     ACC_COLS,
+    ACCUMULATORS,
     _derived,
     recombine,
     rollup_cascade,
@@ -99,20 +108,20 @@ MANIFEST_SCHEMA = (
 #: the columns every data dir stores: the key and the integer rollup
 #: accumulators (:data:`STORED_SCHEMA`), nothing derived from them
 STORED_COLS = ["source", "bucket", *ACC_COLS]
-#: the fixed schema of the stored columns: the accumulators over the raw
-#: table's ``n_tok int`` / ``tokens array<int>`` columns (datagen's
-#: contract), in written order. Declaring it at read time skips parquet
-#: schema inference, which cost one Spark job per tier and read shape on
-#: every fresh store object (the streaming sink opens one per drain).
-#: Stacked months are read from their leaf dirs, without a partition
-#: column; single-dir months are read under a basePath and get p_month
-#: from the directory name. Dirs written before the store dropped the
-#: derived doubles still hold ``avg_n_tok``/``qc_frac``; the declared
-#: schema does not list them, so those dirs read like new ones.
-STORED_SCHEMA = (
-    "source string, bucket timestamp, n_seq long, sum_n_tok long, "
-    "min_n_tok int, max_n_tok int, tok_sum long, tok_min int, tok_max int, "
-    "qc_ok_cnt long"
+#: the fixed schema of the stored columns, in written order, with the
+#: accumulators' stored types from
+#: :data:`~ingestr_spark.operators.rollup.ACCUMULATORS`. Declaring it at
+#: read time skips parquet schema inference, which cost one Spark job per
+#: tier and read shape on every fresh store object (the streaming sink
+#: opens one per drain). Stacked months are read from their leaf dirs,
+#: without a partition column; single-dir months are read under a
+#: basePath and get p_month from the directory name. Dirs written before
+#: the store dropped the derived doubles still hold ``avg_n_tok``/
+#: ``qc_frac``; the declared schema does not list them, so those dirs read
+#: like new ones.
+STORED_SCHEMA = ", ".join(
+    ["source string", "bucket timestamp",
+     *(f"{c} {t}" for c, (_, _, t) in ACCUMULATORS.items())]
 )
 #: what :meth:`AggregateStore.read_tier` and ``read_changes`` return: the
 #: stored columns, ``avg_n_tok`` and ``qc_frac`` derived on read from the
@@ -260,6 +269,16 @@ class AggregateStore:
                 or job_id.startswith(".tmp-") or job_id in (".", "..")):
             raise ValueError(f"job_id {job_id!r} is not filename-safe")
         return job_id
+
+    @staticmethod
+    def _check_tier(*tiers: str) -> None:
+        """Only the :data:`TIER_CHAIN` tiers are stored (module docstring):
+        checked where a data-writing op starts, before anything is
+        written."""
+        for t in tiers:
+            if t not in TIER_CHAIN:
+                raise ValueError(
+                    f"tier {t!r} is not a store tier (one of {TIER_CHAIN})")
 
     def _record_job(
         self, tier: str, job_id: str, version: int,
@@ -625,13 +644,9 @@ class AggregateStore:
     #: publishes realized months — but a resume would re-scan forever).
     #: Such sources pass ``build_tier(discover_from_paths=False)``.
     _DATE_PARTITION_KEYS = frozenset({"p_month", "p_day", "p_date"})
-    #: tiers whose bucket never leaves the row's calendar month, so a file's
-    #: date-partition month IS its buckets' p_month (week buckets cross month
-    #: boundaries; 1y buckets land in January — those must fall back)
-    _PATH_MONTH_TIERS = frozenset({"1h", "1d", "1mo"})
 
     @classmethod
-    def _months_from_input_files(cls, df: DataFrame, tier: str) -> set[str] | None:
+    def _months_from_input_files(cls, df: DataFrame) -> set[str] | None:
         """Metadata-level candidate-month discovery (r6, VERDICT r5 #4):
         when EVERY input file of a file-backed source lies under a
         date-valued partition directory (``.../p_day=2023-01-05/``,
@@ -640,12 +655,11 @@ class AggregateStore:
         so a no-op resume touches ZERO data rows (the slim column-pruned
         discovery scan is still O(input); at 10^11 rows that is minutes for
         nothing). Returns None (caller falls back to the scan) for non-file
-        sources, any file without a recognized date partition segment, or a
-        tier whose buckets can leave the row's calendar month. Path months
+        sources or any file without a recognized date partition segment.
+        A store tier's buckets never leave the row's calendar month, so a
+        file's date-partition month is its buckets' p_month. Path months
         over-approximate when filters exclude whole partitions — safe,
         because the commit only publishes months the write realized."""
-        if tier not in cls._PATH_MONTH_TIERS:
-            return None
         try:
             files = df.inputFiles()
         except Exception:
@@ -699,6 +713,7 @@ class AggregateStore:
 
         Returns the number of month-partitions built this run.
         """
+        self._check_tier(tier)
         job_id = self._check_job_id(job_id or uuid.uuid4().hex[:12])
         cur = self.current_snapshot(tier)  # CAS base for the commit
         agg = _as_stored(
@@ -709,7 +724,7 @@ class AggregateStore:
         done = self.completed_months(tier)
         if done:
             cand = (
-                self._months_from_input_files(source_df, tier)
+                self._months_from_input_files(source_df)
                 if discover_from_paths else None
             )
             if cand is None:
@@ -812,6 +827,7 @@ class AggregateStore:
 
         Returns the list of refreshed months (empty on a committed replay).
         """
+        self._check_tier(tier)
         job_id = self._check_job_id(job_id or uuid.uuid4().hex[:12])
         # phase 1: a retried micro-batch (same job_id, e.g. streaming
         # batchId) that already committed must not double-merge its delta
@@ -866,6 +882,7 @@ class AggregateStore:
         ``job_id`` that already committed reconciles the manifest and
         returns []. Returns the refreshed months.
         """
+        self._check_tier(finer, coarser)
         job_id = self._check_job_id(job_id or uuid.uuid4().hex[:12])
         if self._reconcile_replayed(coarser, job_id):
             return []

@@ -33,9 +33,6 @@ _STEPS = {
     "w": ("interval 1 week", "week"),
 }
 
-GRAIN_OF_TIER = {"raw": None, "1h": "hour", "1d": "day", "1w": "week", "1mo": "month", "1y": "year"}
-
-
 def noleap_filter(date_col):
     """Column predicate keeping everything except Feb-29."""
     return ~((F.month(date_col) == 2) & (F.dayofmonth(date_col) == 29))

@@ -32,6 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ingestr_spark.operators.rollup import ACC_COLS, _raw_aggs
 from ingestr_spark.retention import AggregateStore
 
 
@@ -213,21 +214,14 @@ def windowed_counts_stream(
     key: str = "source",
 ) -> DataFrame:
     """Event-time windowed aggregation with late-data watermarking — the
-    streaming form of the 1h tier. Append-mode-compatible (final counts
-    emitted once the watermark passes the window end)."""
+    streaming form of the 1h tier, with a tier row's first four (``n_tok``)
+    accumulators. Append-mode-compatible (final counts emitted once the
+    watermark passes the window end)."""
     return (
         raw_stream.withWatermark(ts_col, watermark)
         .groupBy(F.window(ts_col, window).alias("win"), F.col(key))
-        .agg(
-            F.count(F.lit(1)).alias("n_seq"),
-            F.sum("n_tok").alias("sum_n_tok"),
-            F.min("n_tok").alias("min_n_tok"),
-            F.max("n_tok").alias("max_n_tok"),
-        )
-        .select(
-            key, F.col("win.start").alias("bucket"), "n_seq",
-            "sum_n_tok", "min_n_tok", "max_n_tok",
-        )
+        .agg(*_raw_aggs()[:4])
+        .select(key, F.col("win.start").alias("bucket"), *ACC_COLS[:4])
     )
 
 

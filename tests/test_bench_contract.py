@@ -9,6 +9,8 @@ names from perfbench itself, without a Spark session.
 from __future__ import annotations
 
 import ast
+import glob
+import importlib
 import inspect
 import os
 
@@ -19,10 +21,9 @@ from ingestr_spark.operators import gapfill
 from ingestr_spark.retention import AggregateStore
 from ingestr_spark.streaming import jobs
 
-WORKLOADS = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "perfbench", "workloads.py",
-)
+PERFBENCH = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "perfbench")
+WORKLOADS = os.path.join(PERFBENCH, "workloads.py")
 
 
 class _RecordingTracer(trace.Tracer):
@@ -87,4 +88,30 @@ def test_workload_attributes_exist():
             seen.add((node.value.id, node.attr))
     assert {o for o, _ in seen} == set(owners)
     missing = sorted((o, a) for o, a in seen if not hasattr(owners[o], a))
+    assert missing == []
+
+
+def test_perfbench_engine_imports_resolve():
+    """Every ``from ingestr_spark... import NAME`` in perfbench's modules,
+    function-local ones included, names an attribute or a submodule that
+    exists."""
+    missing, seen = [], set()
+    for path in sorted(glob.glob(os.path.join(PERFBENCH, "*.py"))):
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        for node in ast.walk(tree):
+            if not (isinstance(node, ast.ImportFrom) and node.module
+                    and node.module.split(".")[0] == "ingestr_spark"):
+                continue
+            mod = importlib.import_module(node.module)
+            for alias in node.names:
+                seen.add(alias.name)
+                if hasattr(mod, alias.name):
+                    continue
+                try:
+                    importlib.import_module(f"{node.module}.{alias.name}")
+                except ImportError:
+                    missing.append((os.path.basename(path), node.module, alias.name))
+    assert {"ACC_COLS", "TIER_GRAIN", "TIER_CHAIN", "EPOCH", "synth_tokens",
+            "get_spark"} <= seen
     assert missing == []

@@ -535,9 +535,9 @@ def test_build_tier_path_vs_scan_discovery_equivalence(spark, tmp_path):
         s_scan.current_snapshot("1d")["partitions"]
     )
     assert _rows(s_path.read_tier("1d")) == _rows(s_scan.read_tier("1d"))
-    # week buckets can cross month boundaries: path discovery must decline
-    assert AggregateStore._months_from_input_files(part_src, "1w") is None
-    assert AggregateStore._months_from_input_files(part_src, "1d") is not None
+    # the path months are the months the build realized
+    assert AggregateStore._months_from_input_files(part_src) == set(
+        s_path.current_snapshot("1d")["partitions"])
     # opt-out flag forces the scan fallback and produces the same store
     s_off = AggregateStore(spark, str(tmp_path / "st_off"))
     assert s_off.build_tier("1d", part_src, discover_from_paths=False) == n_path

@@ -740,6 +740,22 @@ def test_cascade_refresh_from_snapshot_diff(spark, tok, tmp_path):
     assert s.cascade_refresh("1d", "1mo", since_version=v_now) == []
 
 
+def test_store_rejects_tiers_outside_chain(spark, tok, tmp_path):
+    """Only month-aligned tiers are stored: a week bucket can start in the
+    previous month (a month-wise cascade would drop it) and a year bucket
+    lands in January. Every data-writing op refuses such a tier before it
+    writes anything."""
+    root = tmp_path / "store_tiers"
+    s = AggregateStore(spark, str(root))
+    with pytest.raises(ValueError, match="'1w'"):
+        s.cascade_refresh("1d", "1w", since_version=0)
+    with pytest.raises(ValueError, match="'1y'"):
+        s.build_tier("1y", tok)
+    with pytest.raises(ValueError, match="'1w'"):
+        s.incremental_update("1w", tok)
+    assert not (root / "data").exists()
+
+
 def test_compact_rewrites_small_files_value_neutral(spark, tok, tmp_path):
     """compact() (r5, Iceberg rewrite_data_files): after several incremental
     merges a hot month accumulates one parquet set per batch; compaction

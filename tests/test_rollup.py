@@ -10,7 +10,9 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ingestr_spark.operators.rollup import (
+    ACCUMULATORS,
     build_all_tiers,
+    recombine,
     rollup_cascade,
     rollup_from_raw,
 )
@@ -143,3 +145,26 @@ def test_ref_week_cascade_equals_direct(tok):
     direct = rollup_from_raw(tok, "1w_ref")
     via = rollup_cascade(rollup_from_raw(tok, "1d"), "1w_ref")
     assert _rows(direct) == _rows(via)
+
+
+def test_accumulator_types_match_table_and_store_schema(spark, tok):
+    """Each rollup's accumulator columns have the stored type the table
+    declares, and the store's declared schema agrees: a mistyped table row
+    fails here, not at the first store read."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    from ingestr_spark.retention import STORED_SCHEMA
+
+    stored = spark.createDataFrame([], STORED_SCHEMA).schema
+    h1 = rollup_from_raw(tok, "1h")
+    frames = {
+        "rollup_from_raw": h1,
+        "rollup_cascade": rollup_cascade(h1, "1d"),
+        "recombine": recombine(h1.unionByName(h1)),
+        "salted_rollup_from_raw": salted_rollup_from_raw(tok, "1d"),
+    }
+    for c, (_, _, t) in ACCUMULATORS.items():
+        want = _parse_datatype_string(t)
+        assert stored[c].dataType == want, c
+        for name, df in frames.items():
+            assert df.schema[c].dataType == want, (name, c)
